@@ -220,13 +220,12 @@ def oph_minhash_batch(
     return out
 
 
-def simhash_batch(shingle_lists, chunk_shingles: int = 1 << 21) -> np.ndarray:
+def simhash_batch(shingle_lists) -> np.ndarray:
     """SimHash for many docs: per-doc ``np.unpackbits`` (little-endian byte
     view → one (n, 64) uint8 matrix) + a single column sum — one pass over
     the data instead of 64 shift-mask-reduceat passes (2.3× faster,
-    bit-identical; the per-doc working set is 64·n bytes, L2-resident).
-    ``chunk_shingles`` is kept for signature compatibility; the per-doc
-    formulation needs no chunking. Returns int64 array; empty docs → 0."""
+    bit-identical; the per-doc working set is 64·n bytes, L2-resident, so
+    no chunking is needed). Returns int64 array; empty docs → 0."""
     n_docs = len(shingle_lists)
     out = np.zeros(n_docs, dtype=np.int64)
     weights = np.uint64(1) << np.arange(64, dtype=np.uint64)

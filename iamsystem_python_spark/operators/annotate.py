@@ -3,8 +3,8 @@
 ``annotate(df, matcher, text_col)`` ≡ one ``matcher.annot_text`` per row
 (/root/reference/src/iamsystem/matcher/matcher.py:291-301), executed as a
 single ``mapInPandas`` pass: the compiled Matcher (trie + fuzzy config +
-stopwords) is captured in the UDF closure, which Spark broadcasts with the
-task; all per-token work happens inside the Arrow batch.
+stopwords) ships as a Spark broadcast and unpickles once per Python
+worker; all per-token work happens inside the Arrow batch.
 
 Output: one row per annotation (exploded), carrying provenance columns —
 the DataFrame re-expression of ``Annotation`` objects
@@ -126,20 +126,18 @@ def annotate(
     text_col: str = "content",
     id_cols: Optional[Sequence[str]] = None,
     prefilter: bool = True,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """Annotate ``df[text_col]`` with the compiled matcher; returns one row
     per annotation with ``id_cols`` carried through.  ``prefilter=True``
     enables the exact-only unigram skip (see ``_exact_prefilter``) — a
     no-op for fuzzy-configured matchers.
 
-    ``use_broadcast=True`` ships the compiled matcher as a Spark broadcast
-    variable instead of a closure capture: the dictionary then travels
-    torrent-style once per executor and unpickles once per Python worker
-    (cached in the worker's broadcast registry), instead of riding inside
-    every serialized task.  For a 300K-keyword matcher on a 1000-executor
-    cluster that is the difference between per-task and per-worker
-    deserialization cost."""
+    The compiled matcher ships as a Spark broadcast variable, not a
+    closure capture: the dictionary travels torrent-style once per
+    executor and unpickles once per Python worker (cached in the worker's
+    broadcast registry), instead of riding inside every serialized task.
+    For a 300K-keyword matcher on a 1000-executor cluster that is the
+    difference between per-task and per-worker deserialization cost."""
     id_cols = list(id_cols) if id_cols is not None else [
         c for c in df.columns if c != text_col
     ]
@@ -149,13 +147,12 @@ def annotate(
     )
 
     ann_names = [f.name for f in ANNOTATION_FIELDS]
-    bc = _broadcast_matcher(df, matcher) if use_broadcast else None
-    # the closure must not capture `matcher` when broadcasting, or the
-    # pickle still rides in every task — capture a None placeholder instead
-    matcher_ref = None if bc is not None else matcher
+    # the kernel must capture only the broadcast handle, never `matcher`,
+    # or the pickle still rides in every task
+    bc = _broadcast_matcher(df, matcher)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _resolve_matcher(bc) if bc is not None else matcher_ref
+        matcher = _resolve_matcher(bc)
         skip = _exact_prefilter(matcher, prefilter)
         # Columnar accumulation: one list per output column plus a source-row
         # index, materialized with a single vectorized .iloc take for the
@@ -199,19 +196,17 @@ def contains_keyword(
     matcher: Matcher,
     text_col: str = "content",
     prefilter: bool = True,
-    use_broadcast: bool = True,
 ) -> DataFrame:
     """Filter: rows whose text contains ≥1 dictionary match — the minimal
     end-to-end slice of SURVEY.md §7.3 ('find all files containing keyword
     X, fuzzy'). Implemented as a boolean mapInPandas column so the filter
     short-circuits inside the kernel (first match wins; exact-only
     matchers additionally skip the automaton via ``_exact_prefilter``).
-    ``use_broadcast``: see :func:`annotate`."""
-    bc = _broadcast_matcher(df, matcher) if use_broadcast else None
-    matcher_ref = None if bc is not None else matcher
+    The matcher ships as a broadcast, as in :func:`annotate`."""
+    bc = _broadcast_matcher(df, matcher)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        matcher = _resolve_matcher(bc) if bc is not None else matcher_ref
+        matcher = _resolve_matcher(bc)
         skip = _exact_prefilter(matcher, prefilter)
         for pdf in batches:
             flags = []

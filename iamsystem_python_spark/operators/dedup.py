@@ -6,8 +6,8 @@ handles residual skew. The relational shapes (SURVEY.md §2-B):
 - exact dedup      : groupBy(sha256)                — map-side partial agg
 - LSH banding      : posexplode(bands) → self-equi-join on band hash
 - SimHash blocks   : posexplode(blocks) → self-equi-join, Hamming filter
-- verification     : candidate pairs ⋈ shingle sets, exact Jaccard via
-                     array_intersect/array_union (JVM-side, codegen'd)
+- verification     : candidate pairs ⋈ shingles recomputed for just the
+                     candidate docs, exact Jaccard in a numpy kernel
 - bucket cap       : degenerate LSH buckets (e.g. license headers) are
                      capped — the skew backstop the reference hand-rolls as
                      word gates (fuzzy/api.py:204-208) appears here as a
@@ -105,15 +105,15 @@ def lsh_bucket_stats(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def simhash_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """SimHash bit-block LSH: two 64-bit hashes within Hamming distance d
-    share ≥1 identical block when num_blocks > d (pigeonhole). Equi-join on
-    (block_id, block_value), then exact popcount filter — all JVM-side
-    (bit ops + AQE), no UDF."""
+def simhash_blocks(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """(doc_id, simhash, block_id, block_value): one row per 64/num_blocks
+    bit block of each doc's SimHash — the join key of the pigeonhole
+    candidate search (full-corpus self-join here, batch-vs-store join in
+    plans/ingest)."""
     nb = cfg.simhash_num_blocks
     width = 64 // nb
     mask = (1 << width) - 1
-    blocks = sig_df.select(
+    return sig_df.select(
         "doc_id",
         "simhash",
         F.explode(
@@ -130,6 +130,14 @@ def simhash_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame
             )
         ).alias("blk"),
     ).select("doc_id", "simhash", "blk.block_id", "blk.block_value")
+
+
+def simhash_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """SimHash bit-block LSH: two 64-bit hashes within Hamming distance d
+    share ≥1 identical block when num_blocks > d (pigeonhole). Equi-join on
+    (block_id, block_value), then exact popcount filter — all JVM-side
+    (bit ops + AQE), no UDF."""
+    blocks = simhash_blocks(sig_df, cfg)
     a, b = blocks.alias("a"), blocks.alias("b")
     pairs = (
         a.join(b, ["block_id", "block_value"])
@@ -146,28 +154,6 @@ def simhash_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame
         .distinct()
     )
     return pairs
-
-
-def verify_pairs_jaccard(
-    candidates: DataFrame, sig_df: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard on shingle sets of candidate pairs (the verification
-    stage — SURVEY.md §2-C 'Pair verification'). array_intersect /
-    array_union run in whole-stage codegen; shingle arrays are unique-sorted
-    at signature time."""
-    sh = sig_df.select("doc_id", "shingles")
-    out = (
-        candidates.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("shingles", "sh_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-    return out
 
 
 def verify_pairs_recompute(

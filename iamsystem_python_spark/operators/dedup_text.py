@@ -1062,8 +1062,15 @@ def boilerplate_removal(
     for windows). ``carry_cols`` names doc-level columns projected through
     the row-local base frame into the output — a passthrough, NOT a join
     back onto the corpus (the signing-view consumer needs repo/path/sha
-    next to the cleaned text without a second text-bearing shuffle).
+    next to the cleaned text without a second text-bearing shuffle). The
+    text column itself cannot be carried: its cleaned form is
+    ``cleaned_text``.
     """
+    if text_col in carry_cols:
+        raise ValueError(
+            f"carry_cols must not name the text column {text_col!r}; "
+            "its cleaned form is returned as cleaned_text"
+        )
     carry = [c for c in carry_cols if c != id_col]
     if segmenter == "lines":
         sep = "\n"

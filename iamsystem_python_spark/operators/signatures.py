@@ -60,6 +60,15 @@ SIGNATURE_SCHEMA_FULL = T.StructType(
 )
 
 
+def with_doc_id(df: DataFrame) -> DataFrame:
+    """Attach ``doc_id`` = sha2(repo||path||commit) — the one doc identity
+    every stage and runner keys on. An existing ``doc_id`` column wins, so
+    a view that already carries one (signing_view's output) keeps it."""
+    if "doc_id" in df.columns:
+        return df
+    return df.withColumn("doc_id", F.sha2(F.concat("repo", "path", "commit"), 256))
+
+
 def signing_view(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """The text view the signature stage signs when boilerplate-aware
     signing is on (cfg.boilerplate_min_docs): lines occurring in ≥min_docs
@@ -72,8 +81,7 @@ def signing_view(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     - ``sha256`` = sha2(RAW content) — the per-row integrity invariant
       stays bound to the bytes that entered the pipeline, never to the
       stripped view;
-    - ``doc_id`` = sha2(repo||path||commit) — identical derivation to
-      add_signatures' own.
+    - ``doc_id`` — :func:`with_doc_id`, as in add_signatures.
 
     Transport: the strip is operators/dedup_text.boilerplate_removal with
     carry_cols, so repo/path/commit/lang/sha ride the row-local base
@@ -83,9 +91,7 @@ def signing_view(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     if not cfg.boilerplate_min_docs:
         return df
-    with_id = df.withColumn(
-        "doc_id", F.sha2(F.concat("repo", "path", "commit"), 256)
-    ).withColumn("sha256", F.sha2(F.col("content"), 256))
+    with_id = with_doc_id(df).withColumn("sha256", F.sha2(F.col("content"), 256))
     stripped = boilerplate_removal(
         with_id,
         id_col="doc_id",
@@ -123,7 +129,7 @@ def add_signatures(
 ) -> DataFrame:
     """(repo, path, commit, lang, content) → SIGNATURE_SCHEMA rows.
 
-    doc_id = sha256(repo||path||commit); sha256 = sha2(content) is computed
+    doc_id = :func:`with_doc_id`; sha256 = sha2(content) is computed
     JVM-side *before* the kernel and carried through it untouched — the
     per-row integrity invariant (BASELINE.json input_hint) is therefore
     verifiable against any later stage by re-hashing content.
@@ -199,11 +205,7 @@ def add_signatures(
     # content's sha256 already attached — recomputing sha2 here would bind
     # the integrity hash to the stripped view and break the per-row
     # invariant, so existing columns win.
-    prepared = df
-    if "doc_id" not in prepared.columns:
-        prepared = prepared.withColumn(
-            "doc_id", F.sha2(F.concat("repo", "path", "commit"), 256)
-        )
+    prepared = with_doc_id(df)
     if "sha256" not in prepared.columns:
         prepared = prepared.withColumn("sha256", F.sha2(F.col("content"), 256))
     # The kernel is per-ROW (no key grouping), so input-split skew is the

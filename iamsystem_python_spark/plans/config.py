@@ -60,6 +60,3 @@ class PipelineConfig:
         r = self.rows_per_band
         b = self.num_bands
         return 1.0 - (1.0 - t**r) ** b
-
-
-DEFAULT_CONFIG = PipelineConfig()

@@ -38,33 +38,21 @@ Scale notes / documented trades:
     boilerplate stats are a full-corpus pass by definition; run it in the
     periodic full re-sign, not the nightly gate.
 
-Each stage writes parquet + _MANIFEST.json under ``out_dir`` (same resume
-contract as NearDupPipeline: restart loses no completed stage).
+Each stage writes parquet + _MANIFEST.json under ``out_dir`` through the
+same stage runner as NearDupPipeline (plans/stages.StageRunner): restart
+loses no completed stage.
 """
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iamsystem_python_spark.operators import cc, dedup, signatures
 from iamsystem_python_spark.plans.config import PipelineConfig
-from iamsystem_python_spark.plans.pipeline import (
-    _read_stage,
-    _stage_done,
-    _write_stage,
-)
-
-def _doc_id():
-    """doc_id derivation (sha2(repo||path||commit)), built lazily: a
-    module-level Column would require an active SparkContext at IMPORT
-    time, making `import ingest` before SparkSession.getOrCreate() blow
-    up (pyspark Columns are JVM handles, not pure expressions)."""
-    return F.sha2(F.concat("repo", "path", "commit"), 256)
+from iamsystem_python_spark.plans.stages import StageRunner, read_stage
 
 
 def _incremental_band_candidates(
@@ -83,8 +71,6 @@ def _incremental_band_candidates(
         .withColumn("side", F.lit("old"))
     )
     targets = new_bands.withColumn("side", F.lit("new")).unionByName(store_hits)
-    from pyspark.sql import Window
-
     w = Window.partitionBy("band_hash")
     capped = (
         targets.withColumn("bucket_size", F.count("*").over(w))
@@ -112,29 +98,9 @@ def _incremental_simhash_candidates(
 ) -> DataFrame:
     """Batch-vs-(store ∪ batch) SimHash pigeonhole block join, same side
     rule as the band join; exact Hamming filter at candidate time."""
-    nb = cfg.simhash_num_blocks
-    width = 64 // nb
-    mask = (1 << width) - 1
 
     def blocks(sig: DataFrame, side: str) -> DataFrame:
-        return sig.select(
-            "doc_id",
-            "simhash",
-            F.lit(side).alias("side"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("block_id"),
-                            F.shiftrightunsigned(F.col("simhash"), i * width)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("block_value"),
-                        )
-                        for i in range(nb)
-                    ]
-                )
-            ).alias("blk"),
-        ).select("doc_id", "simhash", "side", "blk.block_id", "blk.block_value")
+        return dedup.simhash_blocks(sig, cfg).withColumn("side", F.lit(side))
 
     new_blocks = blocks(new_sig, "new")
     new_keys = new_blocks.select("block_id", "block_value").distinct()
@@ -204,7 +170,6 @@ class IncrementalIngest:
     def __init__(
         self,
         cfg: PipelineConfig = PipelineConfig(),
-        use_simhash: bool = True,
         checkpoint_dir: Optional[str] = None,
     ):
         if cfg.boilerplate_min_docs is not None:
@@ -214,7 +179,6 @@ class IncrementalIngest:
                 "not the incremental ingest"
             )
         self.cfg = cfg
-        self.use_simhash = use_simhash
         self.checkpoint_dir = checkpoint_dir
 
     def run(
@@ -227,34 +191,30 @@ class IncrementalIngest:
         resume: bool = False,
     ) -> DataFrame:
         cfg = self.cfg
-        os.makedirs(out_dir, exist_ok=True)
-        metrics: Dict[str, Dict] = {}
+        stages = StageRunner(spark, out_dir, cfg, resume)
 
-        store_sig = _read_stage(spark, store_dir, "signatures")
-        store_clusters = _read_stage(spark, store_dir, "clusters")
+        store_sig = read_stage(spark, store_dir, "signatures")
+        store_clusters = read_stage(spark, store_dir, "clusters")
 
-        if not (resume and _stage_done(out_dir, "new_signatures")):
-            new_sig = signatures.add_signatures(new_df, cfg)
-            metrics["new_signatures"] = _write_stage(
-                new_sig, out_dir, "new_signatures", cfg
-            )
-        new_sig = _read_stage(spark, out_dir, "new_signatures")
+        new_sig = stages.run(
+            "new_signatures", lambda: signatures.add_signatures(new_df, cfg)
+        )
 
-        if not (resume and _stage_done(out_dir, "candidates")):
+        def candidates() -> DataFrame:
             reps = dedup.distinct_content_representatives(new_sig)
-            cand = _incremental_band_candidates(reps, store_sig, cfg)
-            if self.use_simhash:
-                cand = cand.union(
-                    _incremental_simhash_candidates(reps, store_sig, cfg)
-                ).distinct()
-            metrics["candidates"] = _write_stage(cand, out_dir, "candidates", cfg)
-        cand = _read_stage(spark, out_dir, "candidates")
+            return (
+                _incremental_band_candidates(reps, store_sig, cfg)
+                .union(_incremental_simhash_candidates(reps, store_sig, cfg))
+                .distinct()
+            )
 
-        if not (resume and _stage_done(out_dir, "verified_pairs")):
-            docs = new_df.select(_doc_id().alias("doc_id"), "content")
+        cand = stages.run("candidates", candidates)
+
+        def verified_pairs() -> DataFrame:
+            docs = signatures.with_doc_id(new_df).select("doc_id", "content")
             if hist_docs is not None:
                 docs = docs.union(
-                    hist_docs.select(_doc_id().alias("doc_id"), "content")
+                    signatures.with_doc_id(hist_docs).select("doc_id", "content")
                 )
             else:
                 new_ids = new_sig.select("doc_id")
@@ -271,42 +231,36 @@ class IncrementalIngest:
                         "candidates touch historical docs — pass hist_docs "
                         "(text is read only for the candidate ids)"
                     )
-            verified = dedup.verify_pairs_recompute(cand, docs, cfg)
-            metrics["verified_pairs"] = _write_stage(
-                verified, out_dir, "verified_pairs", cfg
-            )
-        verified = _read_stage(spark, out_dir, "verified_pairs")
+            return dedup.verify_pairs_recompute(cand, docs, cfg)
 
-        if not (resume and _stage_done(out_dir, "new_pairs")):
+        verified = stages.run("verified_pairs", verified_pairs)
+
+        def new_pairs() -> DataFrame:
             exact = _exact_edges(new_sig, store_sig).withColumn(
                 "jaccard", F.lit(1.0)
             )
-            new_pairs = (
+            return (
                 verified.select("doc_a", "doc_b", "jaccard")
                 .union(exact)
                 .distinct()
             )
-            metrics["new_pairs"] = _write_stage(new_pairs, out_dir, "new_pairs", cfg)
-        new_pairs = _read_stage(spark, out_dir, "new_pairs")
 
-        if not (resume and _stage_done(out_dir, "clusters")):
-            cc_stats: Dict[str, object] = {}
-            updated = cc.incremental_connected_components(
+        pairs = stages.run("new_pairs", new_pairs)
+
+        cc_stats: Dict[str, object] = {}
+        updated = stages.run(
+            "clusters",
+            lambda: cc.incremental_connected_components(
                 store_clusters,
-                new_pairs.select("doc_a", "doc_b"),
+                pairs.select("doc_a", "doc_b"),
                 checkpoint_dir=self.checkpoint_dir,
                 stats=cc_stats,
-            )
-            metrics["clusters"] = _write_stage(updated, out_dir, "clusters", cfg)
-            metrics["clusters"].update(cc_stats)
-        updated = _read_stage(spark, out_dir, "clusters")
+            ),
+            stats=cc_stats,
+        )
 
         # roll-forward delta: next night's store signatures = store ∪ delta
-        if not (resume and _stage_done(out_dir, "signatures_delta")):
-            metrics["signatures_delta"] = _write_stage(
-                new_sig, out_dir, "signatures_delta", cfg
-            )
+        stages.run("signatures_delta", lambda: new_sig)
 
-        with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=2, default=str)
+        stages.write_metrics()
         return updated

@@ -3,9 +3,10 @@
 Stage graph (north_rule):
 
   input(repo,path,commit,lang,content)
-    → signing view   (optional, cfg.boilerplate_min_docs: strip lines in
-                      ≥min_docs distinct docs before shingling; sha256
-                      stays bound to raw content — signatures.signing_view)
+    → signing_view   (only when cfg.boilerplate_min_docs is set — then
+                      always its own stage: strip lines in ≥min_docs
+                      distinct docs before shingling; sha256 stays bound
+                      to raw content — signatures.signing_view)
     → signatures     (mapInPandas kernel: shingles/MinHash/bands/SimHash)
     → exact_groups   (sha256 groupBy)
     → candidates     (LSH band self-join ∪ SimHash block self-join,
@@ -16,105 +17,22 @@ Stage graph (north_rule):
     → metrics        (per-stage row counts, bucket histograms)
 
 Each stage writes parquet under ``<out>/<stage>/`` and a ``_MANIFEST.json``
-with row count + config echo. ``resume=True`` skips any stage whose
-manifest exists — restart loses no completed stage (BASELINE.md
-resumability target). Metrics accumulate to ``<out>/metrics.json``.
+with row count + config echo (plans/stages.StageRunner). ``resume=True``
+skips any stage whose manifest exists — restart loses no completed stage
+(BASELINE.md resumability target). The manifests of written and skipped
+stages alike go to ``<out>/metrics.json``.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-from dataclasses import asdict
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iamsystem_python_spark.operators import cc, dedup, signatures
 from iamsystem_python_spark.plans.config import PipelineConfig
-
-
-def _manifest_path(out_dir: str, stage: str) -> str:
-    return os.path.join(out_dir, stage, "_MANIFEST.json")
-
-
-def _stage_done(out_dir: str, stage: str) -> bool:
-    return os.path.exists(_manifest_path(out_dir, stage))
-
-
-def _partition_lineage(path: str) -> Dict:
-    """Per-partition manifest block for a just-written parquet stage:
-    row count + byte size per part-file (parquet footer metadata only —
-    the data pages are never read), plus summary skew indicators. At
-    cluster scale the footer reads are O(#files) driver-side metadata
-    calls, the same cost class as the file listing the write itself did.
-
-    pyarrow is an optional pyspark dependency: when absent, return a
-    null lineage block instead of raising AFTER the expensive stage
-    write succeeded — the manifest (and stage resumability) must never
-    be lost to a missing diagnostics library (ADVICE r04)."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return {"n_files": None, "unavailable": "pyarrow not installed"}
-
-    parts = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        f = os.path.join(path, name)
-        parts.append(
-            {
-                "file": name,
-                "rows": pq.read_metadata(f).num_rows,
-                "bytes": os.path.getsize(f),
-            }
-        )
-    rows = sorted(p["rows"] for p in parts) or [0]
-    med = rows[(len(rows) - 1) // 2]  # lower-middle: empty partitions count
-    return {
-        "n_files": len(parts),
-        "rows_max": rows[-1],
-        "rows_median": med,
-        # max/median is the straggler early-warning; 1.0 = perfectly even
-        "skew_ratio": round(rows[-1] / max(med, 1), 3),
-        "files": parts,
-    }
-
-
-def _write_stage(df: DataFrame, out_dir: str, stage: str, cfg: PipelineConfig) -> Dict:
-    path = os.path.join(out_dir, stage)
-    t0 = time.time()
-    # Row count via an Observation piggybacked on the write action — the
-    # count is collected from the write job's own metrics, so the stage is
-    # never re-read (a second full read of every intermediate would be an
-    # extra 100-TB-scale scan per stage).
-    obs = Observation(f"stage_{stage}")
-    df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    n = int(obs.get["rows"])
-    manifest = {
-        "stage": stage,
-        "rows": n,
-        "seconds": round(time.time() - t0, 3),
-        "config": asdict(cfg),
-        # per-partition lineage: one entry per written part-file, rows and
-        # bytes read from the parquet FOOTERS of the files just written —
-        # no second scan of the data. This is the skew audit trail: a hot
-        # LSH band or a mega-repo shows up as one oversized partition here
-        # long before it shows up as a straggler task downstream.
-        "partitions": _partition_lineage(path),
-    }
-    with open(_manifest_path(out_dir, stage), "w") as f:
-        json.dump(manifest, f, indent=2)
-    return manifest
-
-
-def _read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, stage))
+from iamsystem_python_spark.plans.stages import StageRunner
 
 
 class NearDupPipeline:
@@ -124,24 +42,13 @@ class NearDupPipeline:
     def __init__(
         self,
         cfg: PipelineConfig = PipelineConfig(),
-        use_simhash: bool = True,
         materialize_exact_groups: bool = True,
         collect_bucket_stats: bool = True,
         checkpoint_dir: Optional[str] = None,
-        materialize_signing_view: bool = False,
     ):
         self.cfg = cfg
-        self.use_simhash = use_simhash
         self.materialize_exact_groups = materialize_exact_groups
         self.collect_bucket_stats = collect_bucket_stats
-        # With boilerplate signing on, the stripped view's rebuild kernel
-        # and the signature kernel otherwise FUSE into one stage — two
-        # chained mapInPandas per task doubles peak Python-worker memory
-        # (the 10M round-5 OOM). True writes the signing view as its own
-        # resumable stage ("signing_view") and feeds downstream from the
-        # read-back: one Python kernel per stage, plus resume coverage
-        # for the strip itself. No-op when boilerplate signing is off.
-        self.materialize_signing_view = materialize_signing_view
         # reliable checkpoint location for the iterative CC stage (HDFS /
         # object store on a real cluster); None → localCheckpoint
         self.checkpoint_dir = checkpoint_dir
@@ -154,70 +61,54 @@ class NearDupPipeline:
         resume: bool = False,
     ) -> DataFrame:
         cfg = self.cfg
-        os.makedirs(out_dir, exist_ok=True)
-        metrics: Dict[str, Dict] = {}
+        stages = StageRunner(spark, out_dir, cfg, resume)
 
-        # -- signing view (optional boilerplate-aware strip) -------------------
-        # cfg.boilerplate_min_docs=None: src IS df (no-op). Otherwise every
-        # text consumer downstream — the signature kernel AND the Jaccard
-        # verification recompute — sees the stripped view, while sha256 /
-        # exact groups stay bound to raw content (signatures.signing_view).
-        if cfg.boilerplate_min_docs and self.materialize_signing_view:
-            if not (resume and _stage_done(out_dir, "signing_view")):
-                # built only when the stage will actually run: signing_view's
-                # boilerplate 'auto' rebuild fires driver actions (boiler
-                # count + collect) at BUILD time, which a resumed run must
-                # not pay for a stage it is about to skip
-                metrics["signing_view"] = _write_stage(
-                    signatures.signing_view(df, cfg), out_dir, "signing_view", cfg
-                )
-            src = _read_stage(spark, out_dir, "signing_view")
-        else:
-            src = signatures.signing_view(df, cfg)
-
-        # -- signatures ------------------------------------------------------
-        if not (resume and _stage_done(out_dir, "signatures")):
-            sig = signatures.add_signatures(src, cfg)
-            metrics["signatures"] = _write_stage(sig, out_dir, "signatures", cfg)
-        sig = _read_stage(spark, out_dir, "signatures")
-
-        # -- exact groups (reporting artifact; derivable from signatures) -----
-        if self.materialize_exact_groups and not (
-            resume and _stage_done(out_dir, "exact_groups")
-        ):
-            groups = dedup.exact_dup_groups(sig)
-            metrics["exact_groups"] = _write_stage(groups, out_dir, "exact_groups", cfg)
-
-        # -- candidates (reps only) -------------------------------------------
-        reps = dedup.distinct_content_representatives(sig)
-        if not (resume and _stage_done(out_dir, "candidates")):
-            cand = dedup.lsh_candidate_pairs(reps, cfg)
-            if self.use_simhash:
-                cand = cand.union(dedup.simhash_candidate_pairs(reps, cfg)).distinct()
-            metrics["candidates"] = _write_stage(cand, out_dir, "candidates", cfg)
-        cand = _read_stage(spark, out_dir, "candidates")
-
-        # -- verified pairs ----------------------------------------------------
-        if not (resume and _stage_done(out_dir, "verified_pairs")):
-            # verification must shingle the SAME view the signatures signed
-            # (src): candidates selected on stripped text, verified on
-            # stripped text — otherwise a stripped-candidate pair could be
-            # re-inflated by its header at the exact-Jaccard gate.
-            docs_with_id = (
-                src
-                if "doc_id" in src.columns
-                else src.withColumn(
-                    "doc_id", F.sha2(F.concat("repo", "path", "commit"), 256)
-                )
+        # signing view (boilerplate-aware strip): every text consumer
+        # downstream — the signature kernel AND the Jaccard verification
+        # recompute — sees the stripped view, while sha256 / exact groups
+        # stay bound to raw content (signatures.signing_view). Its own
+        # stage, so the strip's rebuild kernel and the signature kernel
+        # never fuse into one task chain (two chained mapInPandas per task
+        # double peak Python-worker memory), and a resumed run skips the
+        # strip's plan-build actions.
+        src = df
+        if cfg.boilerplate_min_docs:
+            src = stages.run(
+                "signing_view", lambda: signatures.signing_view(df, cfg)
             )
-            verified = dedup.verify_pairs_recompute(cand, docs_with_id, cfg)
-            metrics["verified_pairs"] = _write_stage(
-                verified, out_dir, "verified_pairs", cfg
-            )
-        verified = _read_stage(spark, out_dir, "verified_pairs")
 
-        # -- all pairs: expand through exact groups + exact edges ---------------
-        if not (resume and _stage_done(out_dir, "all_pairs")):
+        sig = stages.run(
+            "signatures", lambda: signatures.add_signatures(src, cfg)
+        )
+
+        # exact groups: reporting artifact, derivable from signatures
+        if self.materialize_exact_groups:
+            stages.run("exact_groups", lambda: dedup.exact_dup_groups(sig))
+
+        # candidates on distinct-content representatives only
+        def candidates() -> DataFrame:
+            reps = dedup.distinct_content_representatives(sig)
+            return (
+                dedup.lsh_candidate_pairs(reps, cfg)
+                .union(dedup.simhash_candidate_pairs(reps, cfg))
+                .distinct()
+            )
+
+        cand = stages.run("candidates", candidates)
+
+        # verification must shingle the SAME view the signatures signed
+        # (src): candidates selected on stripped text, verified on stripped
+        # text — otherwise a stripped-candidate pair could be re-inflated by
+        # its header at the exact-Jaccard gate.
+        verified = stages.run(
+            "verified_pairs",
+            lambda: dedup.verify_pairs_recompute(
+                cand, signatures.with_doc_id(src), cfg
+            ),
+        )
+
+        # all pairs: expand through exact groups + exact edges
+        def all_pairs() -> DataFrame:
             near = dedup.expand_pairs_through_exact_groups(verified, sig)
             exact_edges = (
                 sig.select(
@@ -231,28 +122,30 @@ class NearDupPipeline:
                     F.lit(1.0).alias("jaccard"),
                 )
             )
-            all_pairs = near.select("doc_a", "doc_b", "jaccard").union(exact_edges).distinct()
-            metrics["all_pairs"] = _write_stage(all_pairs, out_dir, "all_pairs", cfg)
-        all_pairs = _read_stage(spark, out_dir, "all_pairs")
+            return (
+                near.select("doc_a", "doc_b", "jaccard")
+                .union(exact_edges)
+                .distinct()
+            )
 
-        # -- clusters ------------------------------------------------------------
-        if not (resume and _stage_done(out_dir, "clusters")):
-            cc_stats: Dict[str, object] = {}
-            clusters = cc.connected_components(
-                all_pairs.select("doc_a", "doc_b"),
+        pairs = stages.run("all_pairs", all_pairs)
+
+        cc_stats: Dict[str, object] = {}
+        clusters = stages.run(
+            "clusters",
+            lambda: cc.connected_components(
+                pairs.select("doc_a", "doc_b"),
                 checkpoint_dir=self.checkpoint_dir,
                 stats=cc_stats,
-            )
-            metrics["clusters"] = _write_stage(clusters, out_dir, "clusters", cfg)
-            metrics["clusters"].update(cc_stats)
-        clusters = _read_stage(spark, out_dir, "clusters")
+            ),
+            stats=cc_stats,
+        )
 
-        # -- metrics ---------------------------------------------------------------
         if self.collect_bucket_stats:
-            bucket_stats = dedup.lsh_bucket_stats(sig, cfg).collect()[0].asDict()
-            metrics["lsh_buckets"] = bucket_stats
-        with open(os.path.join(out_dir, "metrics.json"), "w") as f:
-            json.dump(metrics, f, indent=2, default=str)
+            stages.metrics["lsh_buckets"] = (
+                dedup.lsh_bucket_stats(sig, cfg).collect()[0].asDict()
+            )
+        stages.write_metrics()
         return clusters
 
 

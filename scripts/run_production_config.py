@@ -137,9 +137,6 @@ def main() -> None:
     t0 = time.time()
     clusters = NearDupPipeline(
         cfg, materialize_exact_groups=False, collect_bucket_stats=False,
-        # one Python kernel per stage: the strip rebuild and the signature
-        # kernel must not fuse into one task chain (round-5 OOM postmortem)
-        materialize_signing_view=True,
     ).run(spark, corpus, full_dir, resume=resume)
     n_clustered = clusters.count()
     full_s = time.time() - t0
@@ -151,11 +148,9 @@ def main() -> None:
     }
 
     # -- in-run recall gate ------------------------------------------------
-    from iamsystem_python_spark.plans.ingest import _doc_id
+    from iamsystem_python_spark.operators.signatures import with_doc_id
 
-    truth = spark.read.parquet(truth_path).withColumn(
-        "doc_id", _doc_id()
-    ).persist()
+    truth = with_doc_id(spark.read.parquet(truth_path)).persist()
     n_truth_docs = truth.count()
     tp = truth.select("cluster_id", "doc_id", F.sha2("content", 256).alias("raw_sha"))
     pairs = (

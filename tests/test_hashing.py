@@ -67,7 +67,7 @@ def test_band_hashes_batch_equals_per_doc():
 def test_simhash_batch_equals_per_doc():
     rng = np.random.RandomState(2)
     docs = [rng.randint(0, 2**63, size=n).astype(np.uint64) for n in (0, 3, 50, 500)]
-    batch = simhash_batch(docs, chunk_shingles=64)
+    batch = simhash_batch(docs)
     for i, d in enumerate(docs):
         assert batch[i] == simhash64(d)
 

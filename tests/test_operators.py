@@ -4514,11 +4514,11 @@ def test_partition_lineage_survives_missing_pyarrow(tmp_path, monkeypatch):
     absent — lineage degrades to a null block, resumability survives."""
     import sys as _sys
 
-    from iamsystem_python_spark.plans.pipeline import _partition_lineage
+    from iamsystem_python_spark.plans.stages import partition_lineage
 
     monkeypatch.setitem(_sys.modules, "pyarrow.parquet", None)
     monkeypatch.setitem(_sys.modules, "pyarrow", None)
-    block = _partition_lineage(str(tmp_path))
+    block = partition_lineage(str(tmp_path))
     assert block["n_files"] is None and "unavailable" in block
 
 

@@ -294,16 +294,16 @@ def test_incremental_cc_delta_stats_and_chain_merge(spark):
 
 
 def test_stage_manifest_counts_without_reread(spark, tmp_path):
-    """_write_stage gets the row count from an Observation on the write job
+    """write_stage gets the row count from an Observation on the write job
     itself (VERDICT r1 #5): the manifest count is right, and the whole stage
     write is a single Spark job — a re-read count would need a second job."""
-    from iamsystem_python_spark.plans.pipeline import _write_stage
+    from iamsystem_python_spark.plans.stages import write_stage
 
     df = spark.range(0, 1234).withColumn("x", F.col("id") * 2)
     sc = spark.sparkContext
     sc.setJobGroup("wstage_test", "write-stage job-count probe")
     try:
-        manifest = _write_stage(df, str(tmp_path), "probe", CFG)
+        manifest = write_stage(df, str(tmp_path), "probe", CFG)
     finally:
         sc.setJobGroup(None, None)
     assert manifest["rows"] == 1234
@@ -323,10 +323,10 @@ def test_stage_manifest_counts_without_reread(spark, tmp_path):
 def test_partition_lineage_flags_planted_skew(spark, tmp_path):
     """A deliberately skewed repartition (all rows hashed to one key)
     surfaces in the manifest's skew_ratio."""
-    from iamsystem_python_spark.plans.pipeline import _write_stage
+    from iamsystem_python_spark.plans.stages import write_stage
 
     df = spark.range(0, 5000).withColumn("k", F.lit(1)).repartition(8, "k")
-    manifest = _write_stage(df, str(tmp_path), "skewed", CFG)
+    manifest = write_stage(df, str(tmp_path), "skewed", CFG)
     lineage = manifest["partitions"]
     assert lineage["rows_max"] == 5000  # everything landed in one partition
     assert lineage["skew_ratio"] >= 100 or lineage["n_files"] == 1
@@ -524,6 +524,23 @@ def test_boilerplate_carry_cols_lines_only(spark):
     with pytest.raises(KeyError):
         boilerplate_removal(
             df, min_docs=2, segmenter="windows", carry_cols=("meta",)
+        )
+
+
+@pytest.mark.parametrize("rebuild", ["join", "broadcast"])
+def test_boilerplate_carry_cols_rejects_text_col(spark, rebuild):
+    """Carrying the text column itself is refused up front with a clear
+    error on both rebuild strategies (the join path used to fail with an
+    AnalysisException, the broadcast path selected the text twice)."""
+    from iamsystem_python_spark.operators.dedup_text import boilerplate_removal
+
+    df = spark.createDataFrame(
+        [("d1", "x\ny", "m1"), ("d2", "x\nz", "m2")],
+        ["doc_id", "text", "meta"],
+    )
+    with pytest.raises(ValueError, match="carry_cols"):
+        boilerplate_removal(
+            df, min_docs=2, carry_cols=("meta", "text"), rebuild=rebuild
         )
 
 
@@ -746,16 +763,14 @@ def test_stream_crash_kill9_restart_differential(tmp_path):
         assert op["compare"]["clean_eq_resumed"]
 
 
-def test_materialize_signing_view_stage_and_resume(spark, tmp_path):
-    """materialize_signing_view writes the stripped view as its own
-    manifest-carrying stage (one Python kernel per stage — the 10M OOM
-    fix), downstream results are identical to the fused path, and resume
-    skips the strip."""
+def test_signing_view_stage_and_resume(spark, tmp_path):
+    """With boilerplate_min_docs set, the pipeline writes the stripped view
+    as its own manifest-carrying stage (one Python kernel per stage — the
+    10M OOM fix) and a resumed run skips the strip. The pipeline's results
+    on the stripped view are checked by
+    test_boilerplate_signing_pipeline_end_to_end."""
     import json as _json
     import os as _os
-
-    from iamsystem_python_spark.plans.config import PipelineConfig
-    from iamsystem_python_spark.plans.pipeline import NearDupPipeline
 
     rows = [
         ("r1", "a.py", "c1", "py", "# HDR\n# HDR2\nuniq one two three"),
@@ -766,24 +781,62 @@ def test_materialize_signing_view_stage_and_resume(spark, tmp_path):
         rows, ["repo", "path", "commit", "lang", "content"]
     )
     cfg = PipelineConfig(shuffle_partitions=4, boilerplate_min_docs=2)
-    out_a = str(tmp_path / "fused")
-    out_b = str(tmp_path / "staged")
-    ca = NearDupPipeline(
+    out = str(tmp_path / "staged")
+    pipe = NearDupPipeline(
         cfg, materialize_exact_groups=False, collect_bucket_stats=False
-    ).run(spark, df, out_a)
-    cb = NearDupPipeline(
-        cfg, materialize_exact_groups=False, collect_bucket_stats=False,
-        materialize_signing_view=True,
-    ).run(spark, df, out_b)
-    assert sorted(map(tuple, ca.collect())) == sorted(map(tuple, cb.collect()))
-    man = _os.path.join(out_b, "signing_view", "_MANIFEST.json")
+    )
+    pipe.run(spark, df, out)
+    man = _os.path.join(out, "signing_view", "_MANIFEST.json")
     assert _os.path.exists(man)
-    sv = spark.read.parquet(_os.path.join(out_b, "signing_view"))
-    assert not any("HDR" in r.content for r in sv.collect())  # stripped
+    sv = spark.read.parquet(_os.path.join(out, "signing_view")).collect()
+    assert len(sv) == 3
+    assert not any("HDR" in r.content for r in sv)  # stripped
     mtime = _os.path.getmtime(man)
     # resume: the signing_view stage (and all others) must be skipped
-    NearDupPipeline(
-        cfg, materialize_exact_groups=False, collect_bucket_stats=False,
-        materialize_signing_view=True,
-    ).run(spark, df, out_b, resume=True)
+    pipe.run(spark, df, out, resume=True)
     assert _os.path.getmtime(man) == mtime
+    with open(_os.path.join(out, "metrics.json")) as f:
+        assert _json.load(f)["signing_view"]["rows"] == 3
+
+
+@pytest.mark.parametrize("runner", ["NearDupPipeline", "IncrementalIngest"])
+def test_resume_keeps_stage_metrics(spark, tmp_path, runner):
+    """A resumed run's metrics.json still reports every stage — the skipped
+    ones from their manifests — and the CC round count of the clusters
+    stage, which the resumed run did not recompute."""
+    import json as _json
+    import os as _os
+
+    from iamsystem_python_spark.plans.ingest import IncrementalIngest
+
+    docs = generate_corpus_df(spark, 400, seed=7, partitions=4).drop("cluster_id")
+    out = str(tmp_path / "out")
+    if runner == "NearDupPipeline":
+
+        def run(resume):
+            NearDupPipeline(CFG).run(spark, docs, out, resume=resume)
+
+    else:
+        split = F.pmod(F.xxhash64("repo", "path", "commit"), F.lit(5)) == 0
+        old_docs, new_docs = docs.where(~split), docs.where(split)
+        store = str(tmp_path / "store")
+        NearDupPipeline(CFG).run(spark, old_docs, store)
+
+        def run(resume):
+            IncrementalIngest(CFG).run(
+                spark, new_docs, store, out, hist_docs=old_docs, resume=resume
+            )
+
+    def metrics():
+        with open(_os.path.join(out, "metrics.json")) as f:
+            return _json.load(f)
+
+    run(False)
+    fresh = metrics()
+    run(True)
+    resumed = metrics()
+    assert set(resumed) == set(fresh)
+    assert resumed["clusters"]["cc_rounds"] == fresh["clusters"]["cc_rounds"] >= 1
+    for stage, manifest in fresh.items():
+        if "stage" in manifest:
+            assert resumed[stage] == manifest, stage
