@@ -2072,6 +2072,7 @@ def q98_function_clones(spark, sf_dir):
     function per doc_id%7 residue, a shared class per doc_id%5 on
     doc_id%3==0 docs, and a per-doc unique function embedding a text
     snippet."""
+    from iamsystem_python_spark.functions.scoped_cache import tie_cache
     from iamsystem_python_spark.operators.codeunits import function_clones
 
     docs = _t(spark, sf_dir, "documents")
@@ -2088,7 +2089,8 @@ def q98_function_clones(spark, sf_dir):
         F.substring(F.col("text"), 1, 24), F.lit("'"),
     )
     planted = docs.select(did.alias("doc_id"), content.alias("text"))
-    return function_clones(planted, min_lines=2).orderBy("unit_sha")
+    fc = function_clones(planted, min_lines=2)
+    return tie_cache(fc.orderBy("unit_sha"), fc)
 
 
 def q99_code_metrics(spark, sf_dir):

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from iamsystem_python_spark.functions.scoped_cache import tie_cache
+from iamsystem_python_spark.operators.dedup import bucket_pairs
 from iamsystem_python_spark.operators.dedup_text import shingle_hash_rows
 
 
@@ -200,7 +201,8 @@ def overlap_matrix(
     broadcast. At web scale the hot keys are grams present in MANY
     groups (boilerplate n-grams): ``max_groups_per_hash`` drops grams
     above that group-count before the self-join (a gram in G groups
-    yields O(G²) pair rows), surfaced via an observe metric; denominators
+    yields O(G²) pair rows), surfaced as the observe metric
+    ``overlap_block_cap`` (dedup.bucket_pairs); denominators
     stay the FULL per-group gram counts, so capping only lowers scores.
     With the default None the computation is exactly replayable in ANSI
     SQL (the q71 DuckDB oracle).
@@ -212,24 +214,14 @@ def overlap_matrix(
         .persist()
     )
     sizes = grams.groupBy("grp").agg(F.count("*").alias("n_grams"))
-    joinable = grams
-    if max_groups_per_hash is not None:
-        hot = (
-            grams.groupBy("h60")
-            .agg(F.count("*").alias("_ng"))
-            .where(F.col("_ng") > max_groups_per_hash)
-            .select("h60")
-        )
-        hot = hot.observe(
-            "overlap_hot_gram",
-            F.count(F.lit(1)).alias("overlap_hot_grams_dropped"),
-        )
-        joinable = grams.join(F.broadcast(hot), "h60", "left_anti")
-    a = joinable.select(F.col("grp").alias("group_a"), "h60")
-    b = joinable.select(F.col("grp").alias("group_b"), "h60")
     pairs = (
-        a.join(b, "h60")
-        .where(F.col("group_a") < F.col("group_b"))
+        bucket_pairs(
+            grams.select(F.col("grp").alias("group"), "h60"),
+            "group",
+            "h60",
+            cap=max_groups_per_hash,
+            tag="overlap",
+        )
         .groupBy("group_a", "group_b")
         .agg(F.count("*").alias("shared_ngrams"))
     )

@@ -4,20 +4,26 @@ All stages are declarative DataFrame ops — Catalyst plans the joins, AQE
 handles residual skew. The relational shapes (SURVEY.md §2-B):
 
 - exact dedup      : groupBy(sha256)                — map-side partial agg
-- LSH banding      : posexplode(bands) → self-equi-join on band hash
-- SimHash blocks   : posexplode(blocks) → self-equi-join, Hamming filter
+- pair join        : ``bucket_pairs`` — explode keys, cap hot buckets,
+                     equi-join on the key, keep each pair once. It is the
+                     ONE place for the bucket cap, the canonical pair order
+                     (id_a < id_b) and the batch-vs-store side rule (never
+                     an old-old pair); every candidate generator in the
+                     package calls it and keeps only its key derivation
+                     and its scoring
+- LSH banding      : explode(bands) → bucket_pairs on the band hash
+- SimHash blocks   : explode(blocks) → bucket_pairs, Hamming filter
 - verification     : candidate pairs ⋈ shingles recomputed for just the
                      candidate docs, exact Jaccard in a numpy kernel
-- bucket cap       : degenerate LSH buckets (e.g. license headers) are
+- bucket cap       : degenerate buckets (e.g. license headers) are
                      capped — the skew backstop the reference hand-rolls as
                      word gates (fuzzy/api.py:204-208) appears here as a
                      bucket-size predicate.
-
-doc_id ordering (a < b) canonicalizes pairs so distinct() dedups across
-bands cheaply.
 """
 
 from __future__ import annotations
+
+from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -50,39 +56,118 @@ def distinct_content_representatives(sig_df: DataFrame) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """MinHash-LSH: explode band hashes, self-join on the hash.
+def bucket_pairs(
+    rows: DataFrame,
+    id_col: str,
+    keys: Union[str, Sequence[str]],
+    cap: Optional[int] = None,
+    store: Optional[DataFrame] = None,
+    tag: Optional[str] = None,
+) -> DataFrame:
+    """Every pair of rows sharing a bucket key: the one pair join behind
+    every candidate generator (LSH bands, SimHash blocks, n-gram and
+    fingerprint blocks, blocking columns).
 
-    Returns (doc_a, doc_b) distinct candidate pairs, doc_a < doc_b.
-    Buckets larger than cfg.band_bucket_cap are dropped (logged upstream via
-    lsh_bucket_stats) — a degenerate bucket of B docs would contribute
-    O(B²) pairs; exact dups were already removed, so an over-cap bucket is
-    hash skew, not signal. At 1000-executor scale this predicate is what
-    keeps the shuffle bounded.
-    """
-    bands = sig_df.select(
-        "doc_id", F.explode("bands").alias("band_hash")
-    )
-    # bucket sizing via a window count over band_hash: one shuffle, fully
-    # distributed — and the resulting hash partitioning on band_hash is
-    # exactly what the self-join needs, so Catalyst reuses it (no second
-    # exchange). The earlier groupBy + driver broadcast of the ok-bucket
-    # set serialized millions of hashes through the driver.
-    w = Window.partitionBy("band_hash")
-    pruned = (
-        bands.withColumn("bucket_size", F.count("*").over(w))
-        .where(
-            (F.col("bucket_size") > 1)
-            & (F.col("bucket_size") <= cfg.band_bucket_cap)
+    ``rows`` is (id_col, *keys, *payload). The result carries the key
+    columns and, for the id and each payload column ``c``, ``c_a`` and
+    ``c_b`` with ``{id_col}_a < {id_col}_b``: one row per shared key per
+    pair, so a caller scores it, counts shared keys or ``distinct()``s it.
+
+    ``cap`` drops every bucket of more than ``cap`` rows whole (a B-row
+    bucket yields O(B²) pairs; over the cap it is skew, not signal) via a
+    window count on the key: one shuffle, whose partitioning the join
+    reuses. With ``tag`` the drops surface as the observe metric
+    ``{tag}_block_cap`` (column ``{tag}_rows_dropped``).
+
+    ``store`` holds historical rows of the same schema; ``rows`` is then a
+    batch and no old-old pair is produced. The store is pre-filtered by a
+    broadcast of the batch's key set (one streamed scan), the cap applies
+    to the batch ∪ store bucket, new-new pairs come once and new-old pairs
+    whatever the id order; ``pair_side`` is "new-new" or "new-old"."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    cols = [c for c in rows.columns if c not in keys]
+
+    def capped(df: DataFrame) -> DataFrame:
+        if cap is None:
+            return df
+        sized = df.withColumn("_n", F.count("*").over(Window.partitionBy(*keys)))
+        if tag is not None:
+            sized = sized.observe(
+                f"{tag}_block_cap",
+                F.sum(F.when(F.col("_n") > cap, 1).otherwise(0)).alias(
+                    f"{tag}_rows_dropped"
+                ),
+            )
+        return sized.where((F.col("_n") > 1) & (F.col("_n") <= cap)).drop("_n")
+
+    def side(df: DataFrame, s: str, *extra: str) -> DataFrame:
+        return df.select(*keys, *extra, *[F.col(c).alias(f"{c}_{s}") for c in cols])
+
+    if store is None:
+        kept = capped(rows)
+        return (
+            side(kept, "a")
+            .join(side(kept, "b"), keys)
+            .where(F.col(f"{id_col}_a") < F.col(f"{id_col}_b"))
         )
-        .drop("bucket_size")
+    old = store.select(*rows.columns).join(
+        F.broadcast(rows.select(*keys).distinct()), keys
     )
-    a = pruned.alias("a")
-    b = pruned.alias("b")
+    targets = capped(
+        rows.withColumn("_old", F.lit(False)).unionByName(
+            old.withColumn("_old", F.lit(True))
+        )
+    )
+    n_id, t_id = F.col(f"{id_col}_n"), F.col(f"{id_col}_t")
+    swap = n_id > t_id
     return (
-        a.join(b, "band_hash")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        side(rows, "n")
+        .join(side(targets, "t", "_old"), keys)
+        .where(F.col("_old") | (n_id < t_id))
+        .where(n_id != t_id)
+        .select(
+            *keys,
+            *[
+                F.when(swap, F.col(f"{c}_{x}"))
+                .otherwise(F.col(f"{c}_{y}"))
+                .alias(f"{c}_{z}")
+                for c in cols
+                for x, y, z in (("t", "n", "a"), ("n", "t", "b"))
+            ],
+            F.when(F.col("_old"), F.lit("new-old"))
+            .otherwise(F.lit("new-new"))
+            .alias("pair_side"),
+        )
+    )
+
+
+def lsh_candidate_pairs(
+    sig_df: DataFrame, cfg: PipelineConfig, store: Optional[DataFrame] = None
+) -> DataFrame:
+    """MinHash-LSH: explode band hashes, pair docs sharing a band hash.
+
+    Returns (doc_a, doc_b) distinct candidate pairs, doc_a < doc_b; with a
+    ``store`` signature table, the batch's pairs against the batch and the
+    store (bucket_pairs). Buckets larger than cfg.band_bucket_cap are
+    dropped (logged upstream via lsh_bucket_stats) — exact dups were
+    already removed, so an over-cap bucket is hash skew, not signal. At
+    1000-executor scale this cap is what keeps the shuffle bounded.
+    """
+
+    def bands(sig: DataFrame) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias("doc"), F.explode("bands").alias("band_hash")
+        )
+
+    return (
+        bucket_pairs(
+            bands(sig_df),
+            "doc",
+            "band_hash",
+            cap=cfg.band_bucket_cap,
+            store=None if store is None else bands(store),
+        )
+        .select("doc_a", "doc_b")
         .distinct()
     )
 
@@ -105,13 +190,12 @@ def lsh_bucket_stats(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def simhash_blocks(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(doc_id, simhash, block_id, block_value): one row per 64/num_blocks
-    bit block of each doc's SimHash — the join key of the pigeonhole
-    candidate search (full-corpus self-join here, batch-vs-store join in
-    plans/ingest)."""
-    nb = cfg.simhash_num_blocks
-    width = 64 // nb
+def simhash_blocks(sig_df: DataFrame, num_blocks: int, bits: int = 64) -> DataFrame:
+    """(doc_id, simhash, block_id, block_value): one row per bits/num_blocks
+    bit block of each doc's ``bits``-wide SimHash — the join key of the
+    pigeonhole candidate search (64 bits in the pipeline, 32 in the
+    SQL-portable dedup_text.simhash_pairs_sql)."""
+    width = bits // num_blocks
     mask = (1 << width) - 1
     return sig_df.select(
         "doc_id",
@@ -125,35 +209,80 @@ def simhash_blocks(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
                         .bitwiseAND(F.lit(mask))
                         .alias("block_value"),
                     )
-                    for i in range(nb)
+                    for i in range(num_blocks)
                 ]
             )
         ).alias("blk"),
     ).select("doc_id", "simhash", "blk.block_id", "blk.block_value")
 
 
-def simhash_candidate_pairs(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
+def simhash_candidate_pairs(
+    sig_df: DataFrame, cfg: PipelineConfig, store: Optional[DataFrame] = None
+) -> DataFrame:
     """SimHash bit-block LSH: two 64-bit hashes within Hamming distance d
-    share ≥1 identical block when num_blocks > d (pigeonhole). Equi-join on
-    (block_id, block_value), then exact popcount filter — all JVM-side
-    (bit ops + AQE), no UDF."""
-    blocks = simhash_blocks(sig_df, cfg)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    pairs = (
-        a.join(b, ["block_id", "block_value"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
+    share ≥1 identical block when num_blocks > d (pigeonhole). Pairs on
+    (block_id, block_value) — against a ``store`` as well when given —
+    then an exact popcount filter; all JVM-side (bit ops + AQE), no UDF."""
+
+    def blocks(sig: DataFrame) -> DataFrame:
+        return simhash_blocks(sig, cfg.simhash_num_blocks).withColumnRenamed(
+            "doc_id", "doc"
         )
-        .where(F.col("hamming") <= cfg.simhash_max_hamming)
+
+    return (
+        bucket_pairs(
+            blocks(sig_df),
+            "doc",
+            ["block_id", "block_value"],
+            store=None if store is None else blocks(store),
+        )
+        .where(
+            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+            <= cfg.simhash_max_hamming
+        )
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return pairs
+
+
+def candidate_pairs(
+    reps: DataFrame, cfg: PipelineConfig, store: Optional[DataFrame] = None
+) -> DataFrame:
+    """LSH band pairs ∪ SimHash block pairs of the content representatives
+    ``reps`` (against a ``store`` signature table as well when given)."""
+    return (
+        lsh_candidate_pairs(reps, cfg, store)
+        .union(simhash_candidate_pairs(reps, cfg, store))
+        .distinct()
+    )
+
+
+def exact_edges(sig_df: DataFrame, store: Optional[DataFrame] = None) -> DataFrame:
+    """Exact-duplicate edges (doc_a, doc_b, jaccard=1.0): each doc links to
+    the min doc_id of its sha256. With a ``store`` signature table, each
+    doc also links to the store's min doc_id of its sha (one edge is
+    enough: the store's copies are already one cluster)."""
+    rep = F.min("doc_id").over(Window.partitionBy("sha256"))
+    edges = sig_df.select("doc_id", rep.alias("rep")).where(
+        F.col("doc_id") != F.col("rep")
+    )
+    if store is not None:
+        old_rep = (
+            store.select("doc_id", "sha256")
+            .join(F.broadcast(sig_df.select("sha256").distinct()), "sha256")
+            .groupBy("sha256")
+            .agg(F.min("doc_id").alias("rep"))
+        )
+        edges = edges.union(
+            sig_df.select("doc_id", "sha256")
+            .join(F.broadcast(old_rep), "sha256")
+            .select("doc_id", "rep")
+        )
+    return edges.select(
+        F.least("doc_id", "rep").alias("doc_a"),
+        F.greatest("doc_id", "rep").alias("doc_b"),
+        F.lit(1.0).alias("jaccard"),
+    )
 
 
 def verify_pairs_recompute(

@@ -13,27 +13,7 @@ from pyspark.sql import functions as F
 
 from iamsystem_python_spark.functions import sqlhash
 from iamsystem_python_spark.functions.scoped_cache import tie_cache
-
-
-def _cap_blocks(df: DataFrame, blk_col: str, max_block_size, tag: str) -> DataFrame:
-    """Quadratic backstop for blocked all-pairs operators: drop every row
-    whose block exceeds ``max_block_size`` (a B-row block yields O(B²)
-    pairs — over-cap blocks are skew or a misconfigured blocking column,
-    not signal, mirroring band_bucket_cap in the LSH path). The window
-    count is one shuffle on the block key, which the downstream self-join
-    reuses. Drops are surfaced as named observe metrics
-    (``{tag}_rows_dropped``) rather than lost silently."""
-    if max_block_size is None:
-        return df
-    w = Window.partitionBy(blk_col)
-    sized = df.withColumn("_blk_n", F.count("*").over(w))
-    sized = sized.observe(
-        f"{tag}_block_cap",
-        F.sum(F.when(F.col("_blk_n") > max_block_size, 1).otherwise(0)).alias(
-            f"{tag}_rows_dropped"
-        ),
-    )
-    return sized.where(F.col("_blk_n") <= max_block_size).drop("_blk_n")
+from iamsystem_python_spark.operators.dedup import bucket_pairs, simhash_blocks
 
 
 def exact_dup_groups_text(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -192,14 +172,10 @@ def minhash_lsh_pairs_sql(
     # memory; the big pipeline shares this stage via parquet checkpoints.
     # The cache is scoped to the returned frame (tie_cache): it is
     # unpersisted when the result is GC'd, or via scoped_cache.release().
-    bands = sig.select("doc_id", F.explode(band_keys).alias("band_key")).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, "band_key")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    bands = sig.select(
+        F.col("doc_id").alias("doc"), F.explode(band_keys).alias("band_key")
+    ).persist()
+    cand = bucket_pairs(bands, "doc", "band_key").select("doc_a", "doc_b").distinct()
     sh = sig.select("doc_id", F.col("hset").alias("shingles"))
     out = (
         cand.join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("shingles", "sh_a"), "doc_a")
@@ -248,10 +224,10 @@ def incremental_lsh_pairs_sql(
     tests/test_operators.py). Doc ids must be disjoint between batch and
     store (re-ingests should delete-then-insert upstream).
 
-    Plan shape: the batch side of the band join is small — Catalyst
-    broadcasts it — so the store's band table is ONE probe-side scan with
-    no old-old pair ever generated (the batch is the build side; joining
-    store×store and filtering would be quadratic in history). Verification
+    Plan shape: the store's band table is ONE streamed scan, pre-filtered
+    by a broadcast of the batch's band keys, and no old-old pair is ever
+    generated (``dedup.bucket_pairs`` with a store; joining store×store and
+    filtering would be quadratic in history). Verification
     re-attaches hset from the store for old ids and from the batch
     signatures for new ids.
 
@@ -264,28 +240,14 @@ def incremental_lsh_pairs_sql(
     # the union) — two scalar columns per row, cheap to cache; scoped to
     # the returned frame like the full variant's band cache.
     bands_new = sig_new.select(
-        "doc_id", F.explode(band_keys).alias("band_key")
+        F.col("doc_id").alias("doc"), F.explode(band_keys).alias("band_key")
     ).persist()
     bands_old = index.select(
-        "doc_id", F.explode(band_keys).alias("band_key"), F.lit("old").alias("side")
+        F.col("doc_id").alias("doc"), F.explode(band_keys).alias("band_key")
     )
-    targets = bands_new.withColumn("side", F.lit("new")).unionByName(bands_old)
-    n, t = bands_new.alias("n"), targets.alias("t")
     cand = (
-        n.join(t, "band_key")
-        .where(
-            # each new-new pair once (lower id probes higher); every
-            # new-old pair regardless of id order
-            (F.col("t.side") == "old") | (F.col("n.doc_id") < F.col("t.doc_id"))
-        )
-        .where(F.col("n.doc_id") != F.col("t.doc_id"))
-        .select(
-            F.least(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_b"),
-            F.when(F.col("t.side") == "old", F.lit("new-old"))
-            .otherwise(F.lit("new-new"))
-            .alias("pair_side"),
-        )
+        bucket_pairs(bands_new, "doc", "band_key", store=bands_old)
+        .select("doc_a", "doc_b", "pair_side")
         .distinct()
     )
     sh = sig_new.select("doc_id", "hset").unionByName(
@@ -361,14 +323,10 @@ def bbit_minhash_pairs_sql(
     the survivors when exactness matters."""
     sig = minhash_signatures_sql(df, text_col, k, num_perm, seed)
     band_keys = _band_keys_expr(num_perm, num_bands)
-    bands = sig.select("doc_id", F.explode(band_keys).alias("band_key")).persist()
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(b, "band_key")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    bands = sig.select(
+        F.col("doc_id").alias("doc"), F.explode(band_keys).alias("band_key")
+    ).persist()
+    cand = bucket_pairs(bands, "doc", "band_key").select("doc_a", "doc_b").distinct()
     packed = compress_minhash_index_bbit(sig, num_perm)
     xor = F.col("bb_a").bitwiseXOR(F.col("bb_b"))
     if num_perm < 64:
@@ -443,15 +401,12 @@ def group_minhash_pairs_sql(
     # one signature row per group: tiny frame, two consumers (band join
     # sides + estimate re-attach) — cache scoped to the result
     sig = sig.persist()
-    bands = sig.select(group_col, F.explode(band_keys).alias("band_key"))
-    a, b = bands.alias("a"), bands.alias("b")
+    bands = sig.select(
+        F.col(group_col).alias("group"), F.explode(band_keys).alias("band_key")
+    )
     cand = (
-        a.join(b, "band_key")
-        .where(F.col(f"a.{group_col}") < F.col(f"b.{group_col}"))
-        .select(
-            F.col(f"a.{group_col}").alias("group_a"),
-            F.col(f"b.{group_col}").alias("group_b"),
-        )
+        bucket_pairs(bands, "group", "band_key")
+        .select("group_a", "group_b")
         .distinct()
     )
     est = sum(
@@ -557,11 +512,8 @@ def _ngram_pairs(
         full.union(whole)
         .groupBy("doc_id", "blk")
         .agg(F.collect_set("s").alias("sh"))
-        .select("blk", "doc_id", "sh")
+        .select("blk", F.col("doc_id").alias("doc"), "sh")
     )
-    base = _cap_blocks(base, "blk", max_block_size, "ngram")
-    a = base.select("blk", F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    b = base.select("blk", F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     if measure == "jaccard":
         score = inter / F.size(F.array_union("sh_a", "sh_b"))
@@ -570,8 +522,7 @@ def _ngram_pairs(
     else:
         raise KeyError(f"unknown n-gram pair measure: {measure!r}")
     return (
-        a.join(b, "blk")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(base, "doc", "blk", cap=max_block_size, tag="ngram")
         .withColumn(measure, F.round(score, 6))
         .where(F.col(measure) >= threshold)
         .select("doc_a", "doc_b", measure)
@@ -678,40 +629,22 @@ def simhash_pairs_sql(
     Hamming-join: at 10^12 rows each block table is a groupBy-key join,
     skew-handled by AQE like any equi-join."""
     assert n_blocks > max_hamming, "pigeonhole needs n_blocks > max_hamming"
-    block_w = bits // n_blocks
     sim = simhash_sql(df, text_col, k, bits)
-    # one pass over sim (explode of the block array) — a union of N
-    # projections would re-execute the simhash aggregate subplan per block
-    # (same trap as the MinHash bands; see minhash_lsh_pairs_sql)
-    block_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("block_id"),
-                F.shiftright(F.col("simhash"), b * block_w)
-                .bitwiseAND(F.lit((1 << block_w) - 1))
-                .alias("block_val"),
-            )
-            for b in range(n_blocks)
-        ]
-    )
     # persist sim: the block self-join consumes it twice, and unlike the
     # MinHash hset stage it is two SCALAR columns — caching is cheap and
     # halves the expensive per-bit aggregate (measured at sf0.1: cold
-    # 13.4→3.9 s, warm 3.6→2.5 s)
+    # 13.4→3.9 s, warm 3.6→2.5 s). The blocks are one explode over sim —
+    # a union of N projections would re-execute the simhash aggregate
+    # subplan per block (same trap as the MinHash bands)
     sim = sim.persist()
-    blocks = sim.select(
-        "doc_id", "simhash", F.explode(block_structs).alias("blk")
-    ).select("doc_id", "simhash", "blk.block_id", "blk.block_val")
-    a = blocks.alias("a")
-    b_ = blocks.alias("b")
+    blocks = simhash_blocks(sim, n_blocks, bits).withColumnRenamed("doc_id", "doc")
     out = (
-        a.join(b_, ["block_id", "block_val"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
+        bucket_pairs(blocks, "doc", ["block_id", "block_value"])
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            "doc_a",
+            "doc_b",
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
         )
         .where(F.col("hamming") <= max_hamming)
@@ -1324,8 +1257,9 @@ def winnowing_pairs_sql(
     groupBy. Per-doc sketch sizes join back via two broadcast-size-agnostic
     equi-joins on id. ``max_fp_docs`` drops fingerprints present in more
     than that many documents (shared license headers / generated preambles
-    — the code-corpus hot keys) before the self-join, with the drop count
-    surfaced as an observe metric; denominators stay the FULL sketch sizes
+    — the code-corpus hot keys) before the self-join, with the dropped
+    rows surfaced as the observe metric ``winnow_block_cap``
+    (dedup.bucket_pairs); denominators stay the FULL sketch sizes
     so capping only lowers scores, never inflates them. With
     ``max_fp_docs=None`` the computation is exactly replayable in ANSI SQL
     (the q68 DuckDB oracle).
@@ -1349,19 +1283,14 @@ def winnowing_pairs_sql(
     # returned frame (same tie_cache pattern as the LSH bands frame).
     fps = sketch.persist()
     nfp = fps.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    joinable = fps
-    if max_fp_docs is not None:
-        doc_freq = fps.groupBy("fp").agg(F.count("*").alias("_df"))
-        hot = doc_freq.where(F.col("_df") > max_fp_docs).select("fp")
-        hot = hot.observe(
-            "winnow_hot_fp", F.count(F.lit(1)).alias("winnow_hot_fp_dropped")
-        )
-        joinable = fps.join(F.broadcast(hot), "fp", "left_anti")
-    a = joinable.select(F.col(id_col).alias("doc_a"), "fp")
-    b = joinable.select(F.col(id_col).alias("doc_b"), "fp")
     pairs = (
-        a.join(b, "fp")
-        .where(F.col("doc_a") < F.col("doc_b"))
+        bucket_pairs(
+            fps.select(F.col(id_col).alias("doc"), "fp"),
+            "doc",
+            "fp",
+            cap=max_fp_docs,
+            tag="winnow",
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("shared_fp"))
     )
@@ -1514,35 +1443,27 @@ def novel_docs_verdicts(
       (-1 for novel).
 
     Plan shape: shas shuffle as (doc_id, 64-char sha) — text never
-    crosses; near-dup pairs come from ``incremental_lsh_pairs_sql``
-    (batch side broadcast, store streamed once, no old-old pairs); the
+    crosses; exact pairs (on the sha) and near-dup pairs (via
+    ``incremental_lsh_pairs_sql``) both come from the batch-vs-store pair
+    join ``dedup.bucket_pairs`` (store pre-filtered by a broadcast of the
+    batch's keys and streamed once, no old-old pairs); the
     final assembly is two left joins of per-doc minima onto the batch
     id list. At 10^12 files both indexes are persisted parquet and this
     runs per nightly batch."""
     sha = F.sha2(F.col(text_col), 256)
-    new_sha = new_df.select(F.col("doc_id"), sha.alias("sha"))
-    hist_sha = history_df.select(
-        F.col("doc_id").alias("o_id"), sha.alias("sha"), F.lit(False).alias("o_new")
+    exact = bucket_pairs(
+        new_df.select(F.col("doc_id").alias("doc"), sha.alias("sha")),
+        "doc",
+        "sha",
+        store=history_df.select(F.col("doc_id").alias("doc"), sha.alias("sha")),
     )
-    batch_sha_o = new_sha.select(
-        F.col("doc_id").alias("o_id"), "sha", F.lit(True).alias("o_new")
-    )
-    others = hist_sha.unionByName(batch_sha_o)
-    exact_min = (
-        new_sha.join(others, "sha")
-        .where(
-            (F.col("o_id") != F.col("doc_id"))
-            & (~F.col("o_new") | (F.col("o_id") < F.col("doc_id")))
-        )
-        .groupBy("doc_id")
-        .agg(F.min("o_id").alias("exact_dup_of"))
-    )
+    exact_min = _min_partner(new_df, exact, "exact_dup_of")
 
     index = build_minhash_index(history_df, text_col, k, num_perm, seed)
     pairs = incremental_lsh_pairs_sql(
         new_df, index, text_col, k, num_perm, num_bands, threshold, seed
     )
-    near_min = _near_min_from_pairs(new_df, pairs)
+    near_min = _min_partner(new_df, pairs, "near_dup_of")
     return _verdict_assembly(new_df, exact_min, near_min)
 
 
@@ -1568,11 +1489,11 @@ def _verdict_assembly(
     )
 
 
-def _near_min_from_pairs(new_df: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Per-batch-doc smallest near-dup partner from an
-    incremental_lsh_pairs_sql result: new-new pairs mark only the larger
-    id (smaller-id-wins greedy); new-old pairs mark the new side with the
-    old partner regardless of id order."""
+def _min_partner(new_df: DataFrame, pairs: DataFrame, name: str) -> DataFrame:
+    """Per-batch-doc smallest partner ``name`` from batch-vs-store pairs
+    (doc_a, doc_b, pair_side): new-new pairs mark only the larger id
+    (smaller-id-wins greedy); new-old pairs mark the new side with the old
+    partner regardless of id order."""
     nn = pairs.where(F.col("pair_side") == "new-new").select(
         F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("dup_of")
     )
@@ -1594,7 +1515,7 @@ def _near_min_from_pairs(new_df: DataFrame, pairs: DataFrame) -> DataFrame:
         )
     )
     return (
-        nn.unionByName(no).groupBy("doc_id").agg(F.min("dup_of").alias("near_dup_of"))
+        nn.unionByName(no).groupBy("doc_id").agg(F.min("dup_of").alias(name))
     )
 
 
@@ -1643,17 +1564,12 @@ def novel_docs_verdicts_vs_stores(
     )
 
     sha = F.sha2(F.col(text_col).cast("string"), 256)
-    new_sha = new_df.select(F.col("doc_id"), sha.alias("sha"))
     exact_hist = exact_dups_vs_sha_index(
         spark, new_df, sha_index_path, text_col, sha_prefix_len
     ).select("doc_id", F.col("dup_of").alias("o_id"))
-    exact_batch = (
-        new_sha.join(
-            new_sha.select(F.col("doc_id").alias("o_id"), "sha"), "sha"
-        )
-        .where(F.col("o_id") < F.col("doc_id"))
-        .select("doc_id", "o_id")
-    )
+    exact_batch = bucket_pairs(
+        new_df.select(F.col("doc_id").alias("doc"), sha.alias("sha")), "doc", "sha"
+    ).select(F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("o_id"))
     exact_min = (
         exact_hist.unionByName(exact_batch)
         .groupBy("doc_id")
@@ -1662,7 +1578,7 @@ def novel_docs_verdicts_vs_stores(
     pairs = incremental_lsh_pairs_sql(
         new_df, minhash_index, text_col, k, num_perm, num_bands, threshold, seed
     )
-    near_min = _near_min_from_pairs(new_df, pairs)
+    near_min = _min_partner(new_df, pairs, "near_dup_of")
     return _verdict_assembly(new_df, exact_min, near_min)
 
 

@@ -19,7 +19,7 @@ per row at ~2 buckets. A degenerate long interval fans out into
 span/width buckets; ``max_span_buckets`` drops such rows, and each drop is
 surfaced as a named ``observe`` metric (``range_{l,r}_rows_dropped`` —
 read it from a QueryExecutionListener / ``Observation``), mirroring the
-``_cap_blocks`` backstop in dedup_text.py. Drops are never silent.
+bucket-cap backstop of ``dedup.bucket_pairs``. Drops are never silent.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ def _bucketed(
     b1 = F.floor(F.col(end) / width)
     if max_span_buckets is not None:
         # surface over-span drops as a named metric (same pattern as
-        # dedup_text._cap_blocks) so degenerate-interval loss is visible
+        # the dedup.bucket_pairs cap) so degenerate-interval loss is visible
         # at scale, then filter
         df = df.observe(
             f"{tag}_span_cap",

@@ -19,6 +19,8 @@ from typing import List, Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from iamsystem_python_spark.operators.dedup import bucket_pairs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -170,19 +172,13 @@ def cosine_neardup_pairs(
     ``max_block_size`` drops over-cap blocks (observe metric
     ``cosine_rows_dropped``) so a misconfigured block column can't go O(B²)
     silently at scale — use lsh_bucketed_topk / ivf_topk for large blocks."""
-    from iamsystem_python_spark.operators.dedup_text import _cap_blocks
-
     base = df.select(
         *( [F.col(block_col).alias("blk")] if block_col else [F.lit(0).alias("blk")] ),
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
     )
-    base = _cap_blocks(base, "blk", max_block_size, "cosine")
-    a = base.select("blk", F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    b = base.select("blk", F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
     return (
-        a.join(b, "blk")
-        .where(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(base, "id", "blk", cap=max_block_size, tag="cosine")
         .withColumn("cosine", F.round(cosine_col(F.col("vec_a"), F.col("vec_b")), 6))
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -354,8 +350,6 @@ def semantic_dedup(
     deterministic and embarrassingly parallel — no greedy sequential
     scan over cluster members.
     """
-    from iamsystem_python_spark.operators.dedup_text import _cap_blocks
-
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     # TakeOrderedAndProject (per-partition top-k + driver merge); k rows
     anchor_rows = (
@@ -397,17 +391,14 @@ def semantic_dedup(
     # persist scoped to the returned frame so the k-cosine projection and
     # the source scan run once (tie_cache releases when the result dies)
     assigned = assigned.persist()
-    members = _cap_blocks(
-        assigned.select(F.col("anchor_id").alias("blk"), "id", "vec"),
-        "blk",
-        max_cluster_size,
-        "semdedup",
-    )
-    a = members.select("blk", F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
-    b = members.select("blk", F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
     dropped = (
-        a.join(b, "blk")
-        .where(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(
+            assigned.select(F.col("anchor_id").alias("blk"), "id", "vec"),
+            "id",
+            "blk",
+            cap=max_cluster_size,
+            tag="semdedup",
+        )
         .where(cosine_col(F.col("vec_a"), F.col("vec_b")) >= threshold)
         .select(F.col("id_b").alias("id"))
         .distinct()

@@ -261,8 +261,9 @@ def cap_mega_dirs(
     flat dir would otherwise own a partition; dirs over the cap are
     noise for clone detection anyway. Drops surface as an observe
     metric (``treedup_dir_cap.rows_dropped``), never silently — same
-    contract as dedup_text._cap_blocks. Run BEFORE subtree_hashes /
-    duplicate_subtrees when the corpus may contain such layouts."""
+    contract as the bucket cap of dedup.bucket_pairs. Run BEFORE
+    subtree_hashes / duplicate_subtrees when the corpus may contain such
+    layouts."""
     parent = F.when(
         ~F.col(path_col).contains("/"), F.lit("")
     ).otherwise(

@@ -9,14 +9,16 @@ built from the same operators the full `NearDupPipeline` uses:
   store (prior pipeline out_dir: signatures/ + clusters/)
     + new batch (repo, path, commit, lang, content)
     → new_signatures   (mapInPandas kernel over the BATCH only)
-    → candidates       (batch bands vs store bands ∪ batch bands — the
-                        store side is pre-filtered by a broadcast of the
-                        batch's band-key set, so the store band table is
-                        ONE streamed scan and no old-old pair is ever
-                        generated; same for SimHash blocks)
-    → exact edges      (batch shas vs store shas — each new exact copy
-                        links to the store's min doc per sha: ONE edge is
-                        enough, history's copies are already clustered)
+    → candidates       (dedup.candidate_pairs with the store: the same
+                        LSH band and SimHash block pair functions as the
+                        full build, batch vs store ∪ batch through
+                        dedup.bucket_pairs — the store side is pre-filtered
+                        by a broadcast of the batch's key set, so the store
+                        table is ONE streamed scan and no old-old pair is
+                        ever generated)
+    → exact edges      (dedup.exact_edges with the store — each new exact
+                        copy links to the store's min doc per sha: ONE edge
+                        is enough, history's copies are already clustered)
     → verified_pairs   (exact Jaccard recompute — historical TEXT is read
                         only for the O(|candidates|) old docs touched,
                         via a broadcast semi-join on the candidate id set)
@@ -47,117 +49,12 @@ from __future__ import annotations
 
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iamsystem_python_spark.operators import cc, dedup, signatures
 from iamsystem_python_spark.plans.config import PipelineConfig
 from iamsystem_python_spark.plans.stages import StageRunner, read_stage
-
-
-def _incremental_band_candidates(
-    new_sig: DataFrame, store_sig: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """Batch-vs-(store ∪ batch) LSH band join: every new-new pair once,
-    every new-old pair regardless of id order, never old-old. The store
-    side is pre-filtered by a broadcast of the batch's distinct band keys,
-    then the shared bucket cap applies to the UNION bucket size (the same
-    population the full pipeline would cap for these keys)."""
-    new_bands = new_sig.select("doc_id", F.explode("bands").alias("band_hash"))
-    new_keys = new_bands.select("band_hash").distinct()
-    store_hits = (
-        store_sig.select("doc_id", F.explode("bands").alias("band_hash"))
-        .join(F.broadcast(new_keys), "band_hash")
-        .withColumn("side", F.lit("old"))
-    )
-    targets = new_bands.withColumn("side", F.lit("new")).unionByName(store_hits)
-    w = Window.partitionBy("band_hash")
-    capped = (
-        targets.withColumn("bucket_size", F.count("*").over(w))
-        .where(F.col("bucket_size") <= cfg.band_bucket_cap)
-        .drop("bucket_size")
-    )
-    n = new_bands.alias("n")
-    t = capped.alias("t")
-    return (
-        n.join(t, "band_hash")
-        .where(
-            (F.col("t.side") == "old") | (F.col("n.doc_id") < F.col("t.doc_id"))
-        )
-        .where(F.col("n.doc_id") != F.col("t.doc_id"))
-        .select(
-            F.least(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
-def _incremental_simhash_candidates(
-    new_sig: DataFrame, store_sig: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """Batch-vs-(store ∪ batch) SimHash pigeonhole block join, same side
-    rule as the band join; exact Hamming filter at candidate time."""
-
-    def blocks(sig: DataFrame, side: str) -> DataFrame:
-        return dedup.simhash_blocks(sig, cfg).withColumn("side", F.lit(side))
-
-    new_blocks = blocks(new_sig, "new")
-    new_keys = new_blocks.select("block_id", "block_value").distinct()
-    store_hits = blocks(store_sig, "old").join(
-        F.broadcast(new_keys), ["block_id", "block_value"]
-    )
-    targets = new_blocks.unionByName(store_hits)
-    n, t = new_blocks.alias("n"), targets.alias("t")
-    return (
-        n.join(t, ["block_id", "block_value"])
-        .where(
-            (F.col("t.side") == "old") | (F.col("n.doc_id") < F.col("t.doc_id"))
-        )
-        .where(F.col("n.doc_id") != F.col("t.doc_id"))
-        .where(
-            F.bit_count(F.col("n.simhash").bitwiseXOR(F.col("t.simhash")))
-            <= cfg.simhash_max_hamming
-        )
-        .select(
-            F.least(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("t.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-
-
-def _exact_edges(new_sig: DataFrame, store_sig: DataFrame) -> DataFrame:
-    """Exact-duplicate edges for the batch, by content sha:
-    new-new — each batch doc links to the batch's min doc per sha;
-    new-old — each batch doc links to the STORE's min doc per matched sha
-    (one edge suffices: history's copies are already one cluster)."""
-    new_min = new_sig.groupBy("sha256").agg(F.min("doc_id").alias("rep"))
-    nn = (
-        new_sig.select("doc_id", "sha256")
-        .join(new_min, "sha256")
-        .where(F.col("doc_id") != F.col("rep"))
-        .select(
-            F.least("doc_id", "rep").alias("doc_a"),
-            F.greatest("doc_id", "rep").alias("doc_b"),
-        )
-    )
-    new_shas = new_sig.select("sha256").distinct()
-    old_min = (
-        store_sig.select("doc_id", "sha256")
-        .join(F.broadcast(new_shas), "sha256")
-        .groupBy("sha256")
-        .agg(F.min("doc_id").alias("old_rep"))
-    )
-    no = (
-        new_sig.select("doc_id", "sha256")
-        .join(F.broadcast(old_min), "sha256")
-        .select(
-            F.least("doc_id", "old_rep").alias("doc_a"),
-            F.greatest("doc_id", "old_rep").alias("doc_b"),
-        )
-    )
-    return nn.union(no).distinct()
 
 
 class IncrementalIngest:
@@ -200,15 +97,12 @@ class IncrementalIngest:
             "new_signatures", lambda: signatures.add_signatures(new_df, cfg)
         )
 
-        def candidates() -> DataFrame:
-            reps = dedup.distinct_content_representatives(new_sig)
-            return (
-                _incremental_band_candidates(reps, store_sig, cfg)
-                .union(_incremental_simhash_candidates(reps, store_sig, cfg))
-                .distinct()
-            )
-
-        cand = stages.run("candidates", candidates)
+        cand = stages.run(
+            "candidates",
+            lambda: dedup.candidate_pairs(
+                dedup.distinct_content_representatives(new_sig), cfg, store_sig
+            ),
+        )
 
         def verified_pairs() -> DataFrame:
             docs = signatures.with_doc_id(new_df).select("doc_id", "content")
@@ -235,17 +129,12 @@ class IncrementalIngest:
 
         verified = stages.run("verified_pairs", verified_pairs)
 
-        def new_pairs() -> DataFrame:
-            exact = _exact_edges(new_sig, store_sig).withColumn(
-                "jaccard", F.lit(1.0)
-            )
-            return (
-                verified.select("doc_a", "doc_b", "jaccard")
-                .union(exact)
-                .distinct()
-            )
-
-        pairs = stages.run("new_pairs", new_pairs)
+        pairs = stages.run(
+            "new_pairs",
+            lambda: verified.select("doc_a", "doc_b", "jaccard")
+            .union(dedup.exact_edges(new_sig, store_sig))
+            .distinct(),
+        )
 
         cc_stats: Dict[str, object] = {}
         updated = stages.run(

@@ -86,15 +86,12 @@ class NearDupPipeline:
             stages.run("exact_groups", lambda: dedup.exact_dup_groups(sig))
 
         # candidates on distinct-content representatives only
-        def candidates() -> DataFrame:
-            reps = dedup.distinct_content_representatives(sig)
-            return (
-                dedup.lsh_candidate_pairs(reps, cfg)
-                .union(dedup.simhash_candidate_pairs(reps, cfg))
-                .distinct()
-            )
-
-        cand = stages.run("candidates", candidates)
+        cand = stages.run(
+            "candidates",
+            lambda: dedup.candidate_pairs(
+                dedup.distinct_content_representatives(sig), cfg
+            ),
+        )
 
         # verification must shingle the SAME view the signatures signed
         # (src): candidates selected on stripped text, verified on stripped
@@ -110,21 +107,9 @@ class NearDupPipeline:
         # all pairs: expand through exact groups + exact edges
         def all_pairs() -> DataFrame:
             near = dedup.expand_pairs_through_exact_groups(verified, sig)
-            exact_edges = (
-                sig.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.min("doc_id").over(Window.partitionBy("sha256")).alias("doc_b"),
-                )
-                .where(F.col("doc_a") != F.col("doc_b"))
-                .select(
-                    F.least("doc_a", "doc_b").alias("doc_a"),
-                    F.greatest("doc_a", "doc_b").alias("doc_b"),
-                    F.lit(1.0).alias("jaccard"),
-                )
-            )
             return (
                 near.select("doc_a", "doc_b", "jaccard")
-                .union(exact_edges)
+                .union(dedup.exact_edges(sig))
                 .distinct()
             )
 

@@ -76,11 +76,14 @@ def write_stage(
     stage: str,
     cfg: PipelineConfig,
     stats: Optional[Dict] = None,
+    started: Optional[float] = None,
 ) -> Dict:
     """Write ``df`` as stage ``stage`` and its manifest; ``stats`` (e.g. the
-    CC round count) is merged into the manifest so it survives a resume."""
+    CC round count) is merged into the manifest so it survives a resume.
+    The manifest's ``seconds`` run from ``started`` (default: now), so a
+    caller that built ``df`` eagerly can count the build too."""
     path = os.path.join(out_dir, stage)
-    t0 = time.time()
+    t0 = time.time() if started is None else started
     # Row count via an Observation piggybacked on the write action — the
     # count is collected from the write job's own metrics, so the stage is
     # never re-read (a second full read of every intermediate would be an
@@ -145,8 +148,13 @@ class StageRunner:
             with open(path) as f:
                 self.metrics[name] = json.load(f)
         else:
+            # the clock covers build() too: eager build work (CC rounds,
+            # the boilerplate count) belongs to the stage, not the driver
+            t0 = time.time()
             df = build()
-            self.metrics[name] = write_stage(df, self.out_dir, name, self.cfg, stats)
+            self.metrics[name] = write_stage(
+                df, self.out_dir, name, self.cfg, stats, started=t0
+            )
         return read_stage(self.spark, self.out_dir, name)
 
     def write_metrics(self) -> None:

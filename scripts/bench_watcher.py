@@ -146,7 +146,20 @@ def active_threshold(elapsed_s: float) -> float:
     return thr
 
 
+def refuse_default_overwrite() -> None:
+    """The default output names are committed artifacts: write into an
+    existing one only when its env var names it explicitly."""
+    for var, path in (
+        ("WATCH_LOG", LOG),
+        ("WATCH_OUT", OUT),
+        ("WATCH_SCALING_OUT", SCALING_OUT),
+    ):
+        if var not in os.environ and os.path.exists(path):
+            sys.exit(f"{path} exists; set {var} to write to it anyway")
+
+
 def main() -> None:
+    refuse_default_overwrite()
     os.makedirs(BENCH_DIR, exist_ok=True)
     t_start = time.time()
     t_end = t_start + DEADLINE_H * 3600

@@ -256,7 +256,7 @@ def compare_chunk_dedup(spark, clean_out: str, resumed_out: str) -> dict:
     for rows in gen_rows():
         for doc_id, _lang, content in rows:
             toks = content.split(" ")
-            for ci in range(0, max(1, len(toks)) // CHUNK_TOKENS):
+            for ci in range(-(-len(toks) // CHUNK_TOKENS)):
                 chunk = " ".join(toks[ci * CHUNK_TOKENS : (ci + 1) * CHUNK_TOKENS])
                 h = int(hashlib.sha256(chunk.encode()).hexdigest()[:15], 16)
                 want[(doc_id, ci)] = h not in seen

@@ -934,7 +934,7 @@ def test_ppm_maxval_guard_routes_to_fallback(spark):
 
 def test_interval_overlap_join_span_cap_observed(spark):
     """max_span_buckets drops are surfaced as named observe metrics
-    (range_{l,r}_rows_dropped), mirroring _cap_blocks — degenerate-interval
+    (range_{l,r}_rows_dropped), mirroring the dedup.bucket_pairs cap — degenerate-interval
     loss is never silent (round-2 VERDICT #4 / ADVICE)."""
     from iamsystem_python_spark.operators.ranges import interval_overlap_join
 

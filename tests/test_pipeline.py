@@ -398,6 +398,76 @@ def test_block_cap_bounds_quadratic_variants(spark):
     assert {(r.id_a, r.id_b) for r in capped_v} == {("w1", "w2")}
 
 
+# (doc, bucket key, in store) — cap 3: k3 holds exactly cap rows, k4 one
+# more; k1 is a singleton. With a store, k3/k2 plant new-old pairs with the
+# old id on either side of the new one, kold an old-old pair, knew a
+# new-new pair.
+_PLANTED_BUCKETS = [
+    ("a", "k3", True), ("b", "k3", False), ("c", "k3", True),
+    ("d", "k2", False), ("e", "k2", True),
+    ("f", "kold", True), ("g", "kold", True),
+    ("h", "knew", False), ("i", "knew", False),
+    ("j", "k4", False), ("k", "k4", True), ("l", "k4", False), ("m", "k4", True),
+    ("n", "k1", False),
+]
+
+
+@pytest.mark.parametrize("with_store", [False, True], ids=["self", "store"])
+def test_bucket_pairs_cap_order_and_side_rule(spark, with_store):
+    """dedup.bucket_pairs, the one pair join: a bucket of exactly cap rows
+    pairs, cap + 1 rows and singletons give no pair, ids come ordered with
+    the payload following its id. With a store: no old-old pair, every
+    new-old pair whatever the id order, each new-new pair once."""
+    df = spark.createDataFrame(
+        [(d, k, d.upper(), old) for d, k, old in _PLANTED_BUCKETS],
+        "doc string, key string, p string, old boolean",
+    )
+    if with_store:
+        pairs = dedup.bucket_pairs(
+            df.where(~F.col("old")).drop("old"),
+            "doc",
+            "key",
+            cap=3,
+            store=df.where(F.col("old")).drop("old"),
+        )
+        want = [
+            ("a", "b", "new-old"),
+            ("b", "c", "new-old"),
+            ("d", "e", "new-old"),
+            ("h", "i", "new-new"),
+        ]
+    else:
+        pairs = dedup.bucket_pairs(df.drop("old"), "doc", "key", cap=3).withColumn(
+            "pair_side", F.lit(None)
+        )
+        want = [(a, b, None) for a, b in
+                [("a", "b"), ("a", "c"), ("b", "c"), ("d", "e"), ("f", "g"), ("h", "i")]]
+    rows = pairs.select("doc_a", "doc_b", "pair_side", "p_a", "p_b").collect()
+    assert sorted((r.doc_a, r.doc_b, r.pair_side) for r in rows) == want
+    assert all((r.p_a, r.p_b) == (r.doc_a.upper(), r.doc_b.upper()) for r in rows)
+
+
+def test_stage_seconds_cover_build(spark, tmp_path):
+    """StageRunner times build() together with the write: a stage whose
+    build runs an eager action (as the CC rounds or the boilerplate count
+    do) reports at least that action's time in its manifest."""
+    import time
+
+    from iamsystem_python_spark.plans.stages import StageRunner
+
+    pause = 3.0
+
+    def build():
+        spark.range(1).rdd.foreach(lambda _: time.sleep(pause))
+        return spark.range(10)
+
+    runner = StageRunner(spark, str(tmp_path), CFG)
+    # warm-up: the first parquet write of a session alone can take seconds
+    runner.run("warm", lambda: spark.range(10))
+    runner.run("eager", build)
+    assert runner.metrics["eager"]["seconds"] >= pause
+
+
 # ---------------------------------------------------------------------------
 # boilerplate-aware signing (cfg.boilerplate_min_docs → signatures.signing_view)
 # ---------------------------------------------------------------------------
