@@ -7,9 +7,10 @@ Layers
 - ``core``       pure-Python row kernels (tokenizer, trie, window matcher,
                  fuzzy normalizers) executed *inside* Arrow batches — never
                  per-row Python UDFs at the Spark layer.
-- ``operators``  DataFrame-level operators: annotate, dedup (exact / MinHash-
-                 LSH / SimHash / n-gram Jaccard / embedding cosine),
-                 similarity search, text stats, connected components.
+- ``operators``  DataFrame-level operators: annotate, dedup (the exact +
+                 MinHash-LSH pipeline stages; SimHash / n-gram Jaccard /
+                 embedding cosine pair operators), similarity search, text
+                 stats, connected components.
 - ``sources``    readers + the deterministic synthetic code-corpus generator.
 - ``functions``  pure-column helpers built on pyspark.sql.functions.
 - ``plans``      pipeline configuration + checkpoint/resume manifests.

@@ -11,8 +11,11 @@ handles residual skew. The relational shapes (SURVEY.md §2-B):
                      an old-old pair); every candidate generator in the
                      package calls it and keeps only its key derivation
                      and its scoring
-- LSH banding      : explode(bands) → bucket_pairs on the band hash
-- SimHash blocks   : explode(blocks) → bucket_pairs, Hamming filter
+- LSH banding      : explode(bands) → bucket_pairs on the band hash — the
+                     pipeline's one candidate generator
+- SimHash blocks   : ``simhash_blocks``, the pigeonhole block explode the
+                     SQL (dedup_text.simhash_pairs_sql) and streaming
+                     (streaming.stream_ops) SimHash operators share
 - verification     : candidate pairs ⋈ shingles recomputed for just the
                      candidate docs, exact Jaccard in a numpy kernel
 - bucket cap       : degenerate buckets (e.g. license headers) are
@@ -149,9 +152,10 @@ def lsh_candidate_pairs(
     Returns (doc_a, doc_b) distinct candidate pairs, doc_a < doc_b; with a
     ``store`` signature table, the batch's pairs against the batch and the
     store (bucket_pairs). Buckets larger than cfg.band_bucket_cap are
-    dropped (logged upstream via lsh_bucket_stats) — exact dups were
-    already removed, so an over-cap bucket is hash skew, not signal. At
-    1000-executor scale this cap is what keeps the shuffle bounded.
+    dropped (reported by lsh_bucket_stats, which NearDupPipeline runs only
+    with ``collect_bucket_stats=True``) — exact dups were already removed,
+    so an over-cap bucket is hash skew, not signal. At 1000-executor scale
+    this cap is what keeps the shuffle bounded.
     """
 
     def bands(sig: DataFrame) -> DataFrame:
@@ -190,11 +194,11 @@ def lsh_bucket_stats(sig_df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
-def simhash_blocks(sig_df: DataFrame, num_blocks: int, bits: int = 64) -> DataFrame:
+def simhash_blocks(sig_df: DataFrame, num_blocks: int, bits: int) -> DataFrame:
     """(doc_id, simhash, block_id, block_value): one row per bits/num_blocks
     bit block of each doc's ``bits``-wide SimHash — the join key of the
-    pigeonhole candidate search (64 bits in the pipeline, 32 in the
-    SQL-portable dedup_text.simhash_pairs_sql)."""
+    pigeonhole candidate search in dedup_text.simhash_pairs_sql and
+    streaming.stream_ops.streaming_neardup_stateful."""
     width = bits // num_blocks
     mask = (1 << width) - 1
     return sig_df.select(
@@ -214,47 +218,6 @@ def simhash_blocks(sig_df: DataFrame, num_blocks: int, bits: int = 64) -> DataFr
             )
         ).alias("blk"),
     ).select("doc_id", "simhash", "blk.block_id", "blk.block_value")
-
-
-def simhash_candidate_pairs(
-    sig_df: DataFrame, cfg: PipelineConfig, store: Optional[DataFrame] = None
-) -> DataFrame:
-    """SimHash bit-block LSH: two 64-bit hashes within Hamming distance d
-    share ≥1 identical block when num_blocks > d (pigeonhole). Pairs on
-    (block_id, block_value) — against a ``store`` as well when given —
-    then an exact popcount filter; all JVM-side (bit ops + AQE), no UDF."""
-
-    def blocks(sig: DataFrame) -> DataFrame:
-        return simhash_blocks(sig, cfg.simhash_num_blocks).withColumnRenamed(
-            "doc_id", "doc"
-        )
-
-    return (
-        bucket_pairs(
-            blocks(sig_df),
-            "doc",
-            ["block_id", "block_value"],
-            store=None if store is None else blocks(store),
-        )
-        .where(
-            F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
-            <= cfg.simhash_max_hamming
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def candidate_pairs(
-    reps: DataFrame, cfg: PipelineConfig, store: Optional[DataFrame] = None
-) -> DataFrame:
-    """LSH band pairs ∪ SimHash block pairs of the content representatives
-    ``reps`` (against a ``store`` signature table as well when given)."""
-    return (
-        lsh_candidate_pairs(reps, cfg, store)
-        .union(simhash_candidate_pairs(reps, cfg, store))
-        .distinct()
-    )
 
 
 def exact_edges(sig_df: DataFrame, store: Optional[DataFrame] = None) -> DataFrame:
@@ -380,9 +343,10 @@ def verify_pairs_recompute(
                 sb = np.frombuffer(r.sh_b, dtype=np.uint64)
                 inter = len(np.intersect1d(sa, sb, assume_unique=True))
                 union = len(sa) + len(sb) - inter
-                j = inter / union if union else 1.0
-                if j >= threshold:
-                    rows.append((r.doc_a, r.doc_b, j))
+                # a doc with no shingles is a near-dup of nothing (identical
+                # bytes still link through exact_edges)
+                if union and inter / union >= threshold:
+                    rows.append((r.doc_a, r.doc_b, inter / union))
             yield pd.DataFrame(rows, columns=["doc_a", "doc_b", "jaccard"])
 
     return paired.mapInPandas(jaccard_kernel, schema=schema)

@@ -1,6 +1,6 @@
-"""Signature stage: content → tokens → shingles → MinHash + LSH bands +
-SimHash, in ONE ``mapInPandas`` pass (one Arrow batch in, one out; zero
-per-row Python at the Spark layer).
+"""Signature stage: content → tokens → shingles → MinHash + LSH bands, in
+ONE ``mapInPandas`` pass (one Arrow batch in, one out; zero per-row Python
+at the Spark layer).
 
 This is the engine's re-expression of the reference's hot path
 (annot_text, /root/reference/src/iamsystem/matcher/matcher.py:291-301):
@@ -34,7 +34,6 @@ from iamsystem_python_spark.functions.hashing import (
     oph_minhash_batch,
     minhash_params,
     shingle_hashes,
-    simhash_batch,
 )
 from iamsystem_python_spark.plans.config import PipelineConfig
 
@@ -47,7 +46,6 @@ _BASE_FIELDS = [
     T.StructField("lang", T.StringType()),
     T.StructField("n_tokens", T.IntegerType()),
     T.StructField("bands", T.ArrayType(T.LongType())),
-    T.StructField("simhash", T.LongType()),
 ]
 
 SIGNATURE_SCHEMA = T.StructType(_BASE_FIELDS)
@@ -182,7 +180,6 @@ def add_signatures(
             else:
                 sigs = minhash_batch(sh_lists, a, b)
             bnds = band_hashes_batch(sigs, num_bands).view(np.int64)
-            sims = simhash_batch(sh_lists)
             out = {
                 "doc_id": pdf["doc_id"].to_numpy(),
                 "sha256": pdf["sha256"].to_numpy(),
@@ -194,7 +191,6 @@ def add_signatures(
                     (len(t) for t in token_lists), dtype=np.int32, count=len(pdf)
                 ),
                 "bands": list(bnds),
-                "simhash": sims,
             }
             if include_shingles:
                 out["shingles"] = [s.view(np.int64) for s in sh_lists]

@@ -31,15 +31,12 @@ class PipelineConfig:
     # pipeline recall test.
     minhash_scheme: str = "affine"
     jaccard_threshold: float = 0.7
-    # SimHash
-    simhash_num_blocks: int = 4
-    simhash_max_hamming: int = 3
     # boilerplate-aware signing (opt-in): when set, lines occurring in
     # >= this many DISTINCT documents (license headers, generated
     # preambles) are stripped from the text the signature kernel sees —
-    # shingles, MinHash, SimHash, LSH candidacy and Jaccard verification
-    # all run on the stripped view, so header-sharing alone can no longer
-    # make unrelated files near-duplicates. The per-row sha256 integrity
+    # shingles, MinHash, LSH candidacy and Jaccard verification all run
+    # on the stripped view, so header-sharing alone can no longer make
+    # unrelated files near-duplicates. The per-row sha256 integrity
     # invariant stays bound to the RAW content (signatures.signing_view),
     # and exact-dup groups still key on the raw sha. None = off (the
     # oracle-parity default: signatures are then a pure function of raw

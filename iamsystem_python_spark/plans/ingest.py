@@ -9,13 +9,13 @@ built from the same operators the full `NearDupPipeline` uses:
   store (prior pipeline out_dir: signatures/ + clusters/)
     + new batch (repo, path, commit, lang, content)
     → new_signatures   (mapInPandas kernel over the BATCH only)
-    → candidates       (dedup.candidate_pairs with the store: the same
-                        LSH band and SimHash block pair functions as the
-                        full build, batch vs store ∪ batch through
-                        dedup.bucket_pairs — the store side is pre-filtered
-                        by a broadcast of the batch's key set, so the store
-                        table is ONE streamed scan and no old-old pair is
-                        ever generated)
+    → candidates       (dedup.lsh_candidate_pairs with the store: the
+                        full build's LSH band pair function, batch vs
+                        store ∪ batch through dedup.bucket_pairs — the
+                        store side is pre-filtered by a broadcast of the
+                        batch's band set, so the store table is ONE
+                        streamed scan and no old-old pair is ever
+                        generated)
     → exact edges      (dedup.exact_edges with the store — each new exact
                         copy links to the store's min doc per sha: ONE edge
                         is enough, history's copies are already clustered)
@@ -99,7 +99,7 @@ class IncrementalIngest:
 
         cand = stages.run(
             "candidates",
-            lambda: dedup.candidate_pairs(
+            lambda: dedup.lsh_candidate_pairs(
                 dedup.distinct_content_representatives(new_sig), cfg, store_sig
             ),
         )

@@ -7,10 +7,10 @@ Stage graph (north_rule):
                       always its own stage: strip lines in ≥min_docs
                       distinct docs before shingling; sha256 stays bound
                       to raw content — signatures.signing_view)
-    → signatures     (mapInPandas kernel: shingles/MinHash/bands/SimHash)
+    → signatures     (mapInPandas kernel: shingles/MinHash/bands)
     → exact_groups   (sha256 groupBy)
-    → candidates     (LSH band self-join ∪ SimHash block self-join,
-                      on distinct-content representatives only)
+    → candidates     (LSH band self-join on distinct-content
+                      representatives only)
     → verified_pairs (exact Jaccard ≥ threshold)
     → all_pairs      (expand through exact groups + exact edges)
     → clusters       (connected components, checkpointed)
@@ -88,7 +88,7 @@ class NearDupPipeline:
         # candidates on distinct-content representatives only
         cand = stages.run(
             "candidates",
-            lambda: dedup.candidate_pairs(
+            lambda: dedup.lsh_candidate_pairs(
                 dedup.distinct_content_representatives(sig), cfg
             ),
         )
@@ -144,13 +144,16 @@ def brute_force_pairs(sig_df: DataFrame, threshold: float) -> DataFrame:
     reps = dedup.distinct_content_representatives(sig_df)
     a = reps.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = reps.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
     pairs = (
         a.crossJoin(b)
         .where(F.col("doc_a") < F.col("doc_b"))
+        # a doc with no shingles is a near-dup of nothing (the
+        # verify_pairs_recompute rule): null Jaccard, and no DIVIDE_BY_ZERO
+        # under ANSI mode
         .withColumn(
             "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+            F.when(union > 0, F.size(F.array_intersect("sh_a", "sh_b")) / union),
         )
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")

@@ -205,10 +205,9 @@ def streaming_neardup_stateful(
         shingle_hashes,
         simhash64,
     )
+    from iamsystem_python_spark.operators.dedup import simhash_blocks
 
-    block_w = bits // n_blocks
     mask32 = (1 << bits) - 1
-    block_mask = (1 << block_w) - 1
 
     def sim_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tok = english_tokenizer()
@@ -232,25 +231,11 @@ def streaming_neardup_stateful(
             ]
         ),
     )
-    from pyspark.sql import functions as F  # noqa: shadows module import for clarity
-
-    blocks = simmed.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("block_id"),
-                        F.shiftright(F.col("simhash"), b * block_w)
-                        .bitwiseAND(F.lit(block_mask))
-                        .alias("block_val"),
-                    )
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("blk"),
-    ).select("doc_id", "simhash", "blk.block_id", "blk.block_val")
+    # block_val (not simhash_blocks' block_value) is the state grouping
+    # key, so existing streaming checkpoints keep their key schema
+    blocks = simhash_blocks(simmed, n_blocks, bits).withColumnRenamed(
+        "block_value", "block_val"
+    )
 
     out_schema = T.StructType(
         [

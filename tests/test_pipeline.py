@@ -910,3 +910,41 @@ def test_resume_keeps_stage_metrics(spark, tmp_path, runner):
     for stage, manifest in fresh.items():
         if "stage" in manifest:
             assert resumed[stage] == manifest, stage
+
+
+def test_tokenless_docs_are_near_dups_of_nothing(spark, tmp_path):
+    """One rule for docs with no shingles, in the pipeline and its oracle: a
+    token-less doc is a near-dup of nothing, so two "" docs link only as
+    identical bytes (exact edge) and whitespace-only / null content link to
+    nothing — although every token-less doc shares all band buckets (the
+    all-max sentinel signature). The oracle must score the same rows
+    without dividing by an empty union."""
+
+    def body(n, last=None):
+        lines = [f"def fn_{i}(): return value_{i} + offset * scale" for i in range(n)]
+        return "\n".join(lines + ([last] if last else []))
+
+    rows = [
+        ("r", "e1.py", "c0", "py", ""),
+        ("r", "e2.py", "c0", "py", ""),
+        ("r", "ws.py", "c0", "py", "   \n\t  \n"),
+        ("r", "nul.py", "c0", "py", None),
+        ("r", "n1.py", "c0", "py", body(20)),
+        ("r", "n2.py", "c0", "py", body(19, "def other(): return 3")),
+    ]
+    df = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    cfg = PipelineConfig(shuffle_partitions=4)
+    out = str(tmp_path / "out")
+    NearDupPipeline(
+        cfg, materialize_exact_groups=False, collect_bucket_stats=False
+    ).run(spark, df, out)
+
+    def pair(x, y):
+        return tuple(sorted((_bp_doc_id("r", x), _bp_doc_id("r", y))))
+
+    expected = {pair("e1.py", "e2.py"), pair("n1.py", "n2.py")}
+    assert _pair_set(spark.read.parquet(f"{out}/all_pairs")) == expected
+    sig = signatures.add_signatures(df, cfg, include_shingles=True)
+    assert _pair_set(brute_force_pairs(sig, cfg.jaccard_threshold)) == expected
