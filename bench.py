@@ -215,12 +215,7 @@ def run_dedup_pipeline(spark, n_rows: int, work: str, tag: str, cpus: int,
         "spark.sql.shuffle.partitions",
         str(max(cpus, 8, min(1024, actual_rows // 20_000))),
     )
-    cfg = PipelineConfig(
-        shuffle_partitions=max(cpus, 8),
-        # affine (default) | oph — see plans/config.py; lets A/B runs and
-        # scaling captures measure the one-permutation signature fast path
-        minhash_scheme=os.environ.get("SPARK_GRAFT_MINHASH_SCHEME", "affine"),
-    )
+    cfg = PipelineConfig(shuffle_partitions=max(cpus, 8))
     if warmup:
         wdir = os.path.join(work, f"warmup_{tag}")
         shutil.rmtree(wdir, ignore_errors=True)

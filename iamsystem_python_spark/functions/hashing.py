@@ -5,7 +5,9 @@ reference walks tokens one at a time through a trie
 (/root/reference/src/iamsystem/matcher/strategy.py:25-99), the dedup
 pipeline turns each document into arrays of shingle hashes and folds them
 into MinHash / SimHash signatures — all numpy, no per-row Python at the
-Spark layer (BASELINE.json input_hint mandate).
+Spark layer (BASELINE.json input_hint mandate). One MinHash family signs
+every doc: ``num_perm`` seeded affine permutations (``minhash_params``),
+batched by ``minhash_batch`` and replayed per doc by ``minhash_signature``.
 
 Everything is seeded and process-independent (no builtin ``hash()``, which
 is salted per interpreter): token ids come from crc32, mixing uses
@@ -16,7 +18,7 @@ dup-pair recall metric reproducible.
 from __future__ import annotations
 
 import zlib
-from typing import Dict, List, Sequence
+from typing import Dict, Sequence
 
 import numpy as np
 
@@ -142,84 +144,6 @@ def minhash_batch(
     return out
 
 
-def oph_minhash_batch(
-    shingle_lists, num_bins: int, seed: int = 42
-) -> np.ndarray:
-    """One-Permutation MinHash with rotation densification — the O(n)-per-doc
-    alternative to the k-perm affine family (``minhash_batch`` is
-    O(num_perm·n): each shingle is hashed num_perm times; here it is hashed
-    ONCE and routed to one of ``num_bins`` bins, bin-minima forming the
-    signature). Published method: Li, Owen & Zhang, "One Permutation
-    Hashing" (NIPS 2012); empty bins are filled by borrowing from the next
-    non-empty bin to the right (circular) plus a per-step offset —
-    Shrivastava & Li, "Densifying One Permutation Hashing via Rotation"
-    (ICML 2014) — preserving the collision property P(sig_a[i]==sig_b[i])
-    ≈ J(a,b) that LSH banding needs.
-
-    Output is (n_docs, num_bins) uint64, positionally comparable exactly
-    like a k-perm signature, so ``band_hashes_batch`` and the whole LSH
-    stage work unchanged. Docs with zero shingles keep the all-max sentinel
-    row (same convention as ``minhash_batch``). ``num_bins`` must be a
-    power of two (bin = top bits of the re-keyed hash).
-
-    Scale note: at 10M docs the k-perm multiply-add is ~40% of the
-    signature kernel; this path removes almost all of it at a small
-    estimator-variance cost (shingles per bin ≈ n/num_bins, so short docs
-    densify more). The pipeline recall gate (tests/test_pipeline.py) is the
-    acceptance bar for switching a deployment to ``minhash_scheme='oph'``.
-    """
-    num_bins = int(num_bins)
-    if num_bins & (num_bins - 1):
-        raise ValueError(f"num_bins must be a power of two, got {num_bins}")
-    shift = np.uint64(64 - int(num_bins).bit_length() + 1)
-    n_docs = len(shingle_lists)
-    sentinel = np.iinfo(np.uint64).max
-    out = np.full((n_docs, num_bins), sentinel, dtype=np.uint64)
-    if n_docs == 0:
-        return out
-    lens = np.fromiter((len(s) for s in shingle_lists), dtype=np.int64, count=n_docs)
-    total = int(lens.sum())
-    if total == 0:
-        return out
-    # seeded re-key decorrelates bin routing from the raw shingle values
-    # (and from any other consumer of the same shingles)
-    a, b = minhash_params(1, seed)
-    a0, b0 = a[0], b[0]
-    flat = np.concatenate(shingle_lists) if n_docs > 1 else shingle_lists[0]
-    flat = np.ascontiguousarray(flat, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        flat = a0 * flat + b0
-        # stay uint64 end-to-end (ufunc.at accepts unsigned index arrays);
-        # an int64 astype of the bin column costs more than the bin math
-        doc_idx = np.repeat(np.arange(n_docs, dtype=np.uint64), lens)
-        key = doc_idx * np.uint64(num_bins)
-        if num_bins > 1:
-            key += flat >> shift
-    out_flat = out.reshape(-1)
-    np.minimum.at(out_flat, key, flat)
-
-    # rotation densification: empty bin i takes (value of bin i+step) +
-    # step·C for the smallest step whose SOURCE bin was non-empty in the
-    # original (pre-densification) minima — rolling the original, not the
-    # in-progress array, so a borrow never chains through another borrow;
-    # C breaks ties between borrows of different distances
-    # (Shrivastava & Li 2014)
-    C = np.uint64(0x9E3779B97F4A7C15)
-    has_any = lens > 0
-    orig = out.copy()
-    empty = (orig == sentinel) & has_any[:, None]
-    step = 0
-    with np.errstate(over="ignore"):
-        while empty.any() and step < num_bins:
-            step += 1
-            src = np.roll(orig, -step, axis=1)
-            take = empty & (src != sentinel)
-            if take.any():
-                out[take] = src[take] + np.uint64(step) * C
-                empty &= ~take
-    return out
-
-
 def simhash_batch(shingle_lists) -> np.ndarray:
     """SimHash for many docs: per-doc ``np.unpackbits`` (little-endian byte
     view → one (n, 64) uint8 matrix) + a single column sum — one pass over
@@ -291,16 +215,6 @@ def simhash64(shingles: np.ndarray) -> int:
         if 2 * int(sums[bit]) >= n:
             v |= 1 << bit
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def simhash_blocks(sim: int, num_blocks: int = 4) -> List[int]:
-    """Split a 64-bit simhash into equal bit blocks (for Hamming-distance
-    candidate generation: two hashes within d bits share ≥1 identical block
-    when num_blocks > d)."""
-    u = sim & 0xFFFFFFFFFFFFFFFF
-    width = 64 // num_blocks
-    mask = (1 << width) - 1
-    return [(u >> (i * width)) & mask for i in range(num_blocks)]
 
 
 def hamming64(x: int, y: int) -> int:

@@ -31,7 +31,6 @@ from iamsystem_python_spark.functions.hashing import (
     TokenIdMap,
     band_hashes_batch,
     minhash_batch,
-    oph_minhash_batch,
     minhash_params,
     shingle_hashes,
 )
@@ -50,11 +49,7 @@ _BASE_FIELDS = [
 
 SIGNATURE_SCHEMA = T.StructType(_BASE_FIELDS)
 SIGNATURE_SCHEMA_FULL = T.StructType(
-    _BASE_FIELDS
-    + [
-        T.StructField("shingles", T.ArrayType(T.LongType())),
-        T.StructField("minhash", T.ArrayType(T.LongType())),
-    ]
+    _BASE_FIELDS + [T.StructField("shingles", T.ArrayType(T.LongType()))]
 )
 
 
@@ -132,8 +127,8 @@ def add_signatures(
     per-row integrity invariant (BASELINE.json input_hint) is therefore
     verifiable against any later stage by re-hashing content.
 
-    By default shingle sets and raw minhash arrays are NOT materialized:
-    at 10^12-file scale they would dominate storage and stage-write I/O
+    By default shingle sets are NOT materialized: at 10^12-file scale
+    they would dominate storage and stage-write I/O
     (~10 KB/doc of incompressible hashes — measured 80%+ of stage wall
     clock on this box's disk). Verification recomputes shingles for just
     the candidate docs (dedup.verify_pairs_recompute). Pass
@@ -142,12 +137,9 @@ def add_signatures(
     k = cfg.shingle_k
     num_bands = cfg.num_bands
     tokenizer_name = cfg.tokenizer
-    scheme = cfg.minhash_scheme
-    if scheme not in ("affine", "oph"):
-        raise KeyError(f"unknown minhash_scheme: {scheme!r}")
-    num_perm, seed = cfg.num_perm, cfg.seed
-    a, b = minhash_params(num_perm, seed)
-    names = [f.name for f in (SIGNATURE_SCHEMA_FULL if include_shingles else SIGNATURE_SCHEMA).fields]
+    a, b = minhash_params(cfg.num_perm, cfg.seed)
+    schema = SIGNATURE_SCHEMA_FULL if include_shingles else SIGNATURE_SCHEMA
+    names = schema.fieldNames()
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         tok = _get_tokenizer(tokenizer_name)
@@ -158,27 +150,9 @@ def add_signatures(
             sh_lists = [
                 np.unique(shingle_hashes(idmap.ids(toks), k)) for toks in token_lists
             ]
-            # batched numpy: affine = one linear pass per permutation over
-            # the whole Arrow batch (cache-friendly — see minhash_batch
-            # docstring); oph = ONE pass total + bin minima + rotation
-            # densification (see oph_minhash_batch — the O(n) fast path)
-            if scheme == "oph":
-                sigs = oph_minhash_batch(sh_lists, num_perm, seed)
-                # STRIDE bins across bands: rotation densification fills
-                # ADJACENT bins with correlated values (borrows of the same
-                # local min), so a contiguous band slice over a densified
-                # run hashes equal across many docs → mega LSH buckets
-                # (measured: candidates stage 5× slower from hot band keys
-                # at 2M docs). Band i taking bins {i, i+B, i+2B, ...}
-                # breaks the adjacency — each band mixes maximally-distant
-                # bins. Deterministic pure reindex, applied identically to
-                # every doc, so collision probabilities per band row are
-                # unchanged.
-                sigs = np.ascontiguousarray(
-                    sigs[:, np.arange(num_perm).reshape(-1, num_bands).T.reshape(-1)]
-                )
-            else:
-                sigs = minhash_batch(sh_lists, a, b)
+            # batched numpy: one linear pass per permutation over the
+            # whole Arrow batch (cache-friendly — see minhash_batch)
+            sigs = minhash_batch(sh_lists, a, b)
             bnds = band_hashes_batch(sigs, num_bands).view(np.int64)
             out = {
                 "doc_id": pdf["doc_id"].to_numpy(),
@@ -194,7 +168,6 @@ def add_signatures(
             }
             if include_shingles:
                 out["shingles"] = [s.view(np.int64) for s in sh_lists]
-                out["minhash"] = list(sigs.view(np.int64))
             yield pd.DataFrame(out, columns=names)
 
     # signing_view supplies pre-stripped content WITH doc_id and the raw
@@ -216,5 +189,4 @@ def add_signatures(
     prepared = prepared.select(
         "doc_id", "sha256", "repo", "path", "commit", "lang", "content"
     )
-    schema = SIGNATURE_SCHEMA_FULL if include_shingles else SIGNATURE_SCHEMA
     return prepared.mapInPandas(kernel, schema=schema)

@@ -23,13 +23,6 @@ class PipelineConfig:
     # not just above it. Sub-threshold candidates are removed by exact
     # verification, so the extra join traffic costs throughput, not precision.
     seed: int = 42
-    # affine = k independent affine perms (oracle-replayable in SQL, the
-    # parity/default path); oph = one-permutation hashing + rotation
-    # densification (functions/hashing.oph_minhash_batch) — O(n) per doc
-    # vs O(num_perm·n), the 100-TB signature fast path. Same signature
-    # shape, banding and downstream stages unchanged; gate a switch on the
-    # pipeline recall test.
-    minhash_scheme: str = "affine"
     jaccard_threshold: float = 0.7
     # boilerplate-aware signing (opt-in): when set, lines occurring in
     # >= this many DISTINCT documents (license headers, generated

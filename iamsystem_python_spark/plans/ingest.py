@@ -36,6 +36,11 @@ Scale notes / documented trades:
     old exact-dup group that shares bands fans candidates in, bounded by
     the band bucket cap; connectivity is unaffected because history's
     exact copies are already one cluster in the store.
+  * The store must be signed with the runner's signing config (the
+    ``SIGNING_FIELDS`` of its ``signatures`` manifest echo): under any
+    other seed, signature width, banding, shingle size or tokenizer the
+    batch shares no band bucket with the store, so a mismatch is an error
+    raised before any Spark job, never a silent recall loss.
   * ``cfg.boilerplate_min_docs`` is rejected here: corpus-frequency
     boilerplate stats are a full-corpus pass by definition; run it in the
     periodic full re-sign, not the nightly gate.
@@ -54,7 +59,15 @@ from pyspark.sql import functions as F
 
 from iamsystem_python_spark.operators import cc, dedup, signatures
 from iamsystem_python_spark.plans.config import PipelineConfig
-from iamsystem_python_spark.plans.stages import StageRunner, read_stage
+from iamsystem_python_spark.plans.stages import (
+    StageRunner,
+    read_manifest,
+    read_stage,
+)
+
+# the PipelineConfig fields a signature depends on: a batch and a store
+# signed under different values share no band bucket
+SIGNING_FIELDS = ("seed", "num_perm", "num_bands", "shingle_k", "tokenizer")
 
 
 class IncrementalIngest:
@@ -88,6 +101,18 @@ class IncrementalIngest:
         resume: bool = False,
     ) -> DataFrame:
         cfg = self.cfg
+        signed = read_manifest(store_dir, "signatures")["config"]
+        mismatch = [
+            f"{k}: store {signed.get(k)!r}, ingest {getattr(cfg, k)!r}"
+            for k in SIGNING_FIELDS
+            if signed.get(k) != getattr(cfg, k)
+        ]
+        if mismatch:
+            raise ValueError(
+                f"store {store_dir} was signed with another config "
+                f"({'; '.join(mismatch)}); ingest with the store's config "
+                "or re-sign the store"
+            )
         stages = StageRunner(spark, out_dir, cfg, resume)
 
         store_sig = read_stage(spark, store_dir, "signatures")

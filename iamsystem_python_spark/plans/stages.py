@@ -115,6 +115,11 @@ def read_stage(spark: SparkSession, out_dir: str, stage: str) -> DataFrame:
     return spark.read.parquet(os.path.join(out_dir, stage))
 
 
+def read_manifest(out_dir: str, stage: str) -> Dict:
+    with open(_manifest_path(out_dir, stage)) as f:
+        return json.load(f)
+
+
 class StageRunner:
     """Skip-or-write each stage of one run under ``out_dir`` and collect
     the stage manifests into ``metrics``."""
@@ -143,10 +148,8 @@ class StageRunner:
         only when the stage is (re)written, so a resumed run never pays for
         the plan-build actions of a stage it skips; ``stats`` is a dict
         ``build`` fills, stored in the manifest."""
-        path = _manifest_path(self.out_dir, name)
-        if self.resume and os.path.exists(path):
-            with open(path) as f:
-                self.metrics[name] = json.load(f)
+        if self.resume and os.path.exists(_manifest_path(self.out_dir, name)):
+            self.metrics[name] = read_manifest(self.out_dir, name)
         else:
             # the clock covers build() too: eager build work (CC rounds,
             # the boilerplate count) belongs to the stage, not the driver

@@ -4,8 +4,6 @@ configuration a 100-TB deployment would copy, with every previously
 separately-evidenced scale feature ACTIVE IN THE SAME RUN:
 
   * 10M-file deterministic synthetic corpus (sources/codegen, seed 42);
-  * ``minhash_scheme="oph"`` — one-permutation hashing + rotation
-    densification, the O(n)-per-doc signature fast path;
   * ``boilerplate_min_docs`` — boilerplate-aware signing (shared license
     headers / generated preambles stripped from the signed view; sha256
     integrity stays bound to raw content);
@@ -75,14 +73,6 @@ def main() -> None:
     out = {
         "rows": N_ROWS,
         "batch_rows": BATCH_ROWS,
-        "config": {
-            "minhash_scheme": "oph",
-            "boilerplate_min_docs": BOILERPLATE_MIN_DOCS,
-            "num_perm": 128,
-            "num_bands": 32,
-            "shingle_k": 5,
-            "jaccard_threshold": 0.7,
-        },
         "host_probe_start_mb_s": bench.host_fresh_page_mb_s(),
     }
 
@@ -125,7 +115,6 @@ def main() -> None:
     out["shuffle_partitions"] = shuffle_parts
     cfg = PipelineConfig(
         shuffle_partitions=32,
-        minhash_scheme="oph",
         boilerplate_min_docs=BOILERPLATE_MIN_DOCS,
     )
 
@@ -214,7 +203,7 @@ def main() -> None:
     ).drop("cluster_id")
     ingest_dir = os.path.join(WORK, "nightly")
     shutil.rmtree(ingest_dir, ignore_errors=True)
-    inc_cfg = PipelineConfig(shuffle_partitions=32, minhash_scheme="oph")
+    inc_cfg = PipelineConfig(shuffle_partitions=32)
     t0 = time.time()
     upd = IncrementalIngest(inc_cfg).run(
         spark, batch, full_dir, ingest_dir, hist_docs=corpus

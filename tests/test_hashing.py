@@ -17,7 +17,6 @@ from iamsystem_python_spark.functions.hashing import (
     shingle_hashes,
     simhash64,
     simhash_batch,
-    simhash_blocks,
     splitmix64,
 )
 
@@ -102,15 +101,6 @@ def test_simhash_locality():
     assert d_far >= 16
 
 
-def test_simhash_blocks_pigeonhole():
-    x = simhash64(np.arange(100, dtype=np.uint64))
-    blocks = simhash_blocks(x, 4)
-    assert len(blocks) == 4
-    # flipping ≤3 bits leaves ≥1 of 4 16-bit blocks identical
-    y = x ^ 0b111
-    assert sum(a == b for a, b in zip(blocks, simhash_blocks(y, 4))) >= 1
-
-
 def test_splitmix_avalanche():
     x = np.array([1, 2], dtype=np.uint64)
     h = splitmix64(x)
@@ -135,69 +125,3 @@ def test_simhash_tie_rule_unified():
     assert simhash64(s3) & 0b100 == 0
     assert int(simhash_batch([s3])[0]) & 0b100 == 0
 
-
-def test_oph_minhash_properties():
-    """One-permutation MinHash (oph_minhash_batch): shape/sentinel
-    conventions, determinism, full densification, and power-of-two guard."""
-    import numpy as np
-
-    from iamsystem_python_spark.functions.hashing import oph_minhash_batch
-
-    rng = np.random.default_rng(7)
-    docs = [np.unique(rng.integers(0, 2**63, size=n).astype(np.uint64))
-            for n in (1, 3, 50, 400)]
-    sigs = oph_minhash_batch(docs + [np.empty(0, dtype=np.uint64)], 128, seed=42)
-    assert sigs.shape == (5, 128) and sigs.dtype == np.uint64
-    # empty doc keeps the all-max sentinel row (minhash_batch convention)
-    assert (sigs[4] == np.iinfo(np.uint64).max).all()
-    # every non-empty doc densifies completely — even the 1-shingle doc
-    assert not (sigs[:4] == np.iinfo(np.uint64).max).any()
-    # deterministic, batch-composition independent
-    again = oph_minhash_batch(docs, 128, seed=42)
-    assert (sigs[:4] == again).all()
-    solo = oph_minhash_batch([docs[2]], 128, seed=42)
-    assert (solo[0] == sigs[2]).all()
-    # different seed routes bins differently
-    other = oph_minhash_batch(docs, 128, seed=43)
-    assert not (other == sigs[:4]).all()
-    import pytest
-
-    with pytest.raises(ValueError):
-        oph_minhash_batch(docs, 100, seed=42)
-
-
-def test_oph_minhash_estimates_jaccard():
-    """Matching-bin fraction estimates Jaccard with accuracy comparable to
-    the k-perm affine family (Li/Owen/Zhang 2012; densification per
-    Shrivastava & Li 2014 keeps P(match) ≈ J for sparse bins too)."""
-    import numpy as np
-
-    from iamsystem_python_spark.functions.hashing import oph_minhash_batch
-
-    rng = np.random.default_rng(0)
-    errs = []
-    for _ in range(40):
-        base = rng.integers(0, 2**63, size=400).astype(np.uint64)
-        n_shared = int(400 * (rng.random() * 0.8 + 0.15))
-        x = np.unique(base)
-        y = np.unique(
-            np.concatenate(
-                [base[:n_shared],
-                 rng.integers(0, 2**63, size=400 - n_shared).astype(np.uint64)]
-            )
-        )
-        j = len(np.intersect1d(x, y)) / len(np.union1d(x, y))
-        s = oph_minhash_batch([x, y], 128, seed=42)
-        errs.append(abs(float((s[0] == s[1]).mean()) - j))
-    assert float(np.mean(errs)) < 0.06 and max(errs) < 0.15
-
-
-def test_oph_identical_docs_identical_sigs():
-    import numpy as np
-
-    from iamsystem_python_spark.functions.hashing import oph_minhash_batch
-
-    rng = np.random.default_rng(3)
-    x = np.unique(rng.integers(0, 2**63, size=37).astype(np.uint64))
-    s = oph_minhash_batch([x, x.copy()], 64, seed=42)
-    assert (s[0] == s[1]).all()

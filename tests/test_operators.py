@@ -825,6 +825,24 @@ def test_neardup_state_fn_lru_eviction():
     assert len(out) == 0
 
 
+def test_simhash_blocks_pigeonhole(spark):
+    """Flipping <= 3 bits of a 64-bit SimHash leaves >= 1 of its 4 16-bit
+    blocks identical, so the block join finds the pair."""
+    from iamsystem_python_spark.functions.hashing import simhash64
+    from iamsystem_python_spark.operators.dedup import simhash_blocks
+
+    x = simhash64(np.arange(100, dtype=np.uint64))
+    df = spark.createDataFrame(
+        [("x", x), ("y", x ^ 0b111)], "doc_id string, simhash long"
+    )
+    blocks = {
+        (r.doc_id, r.block_id): r.block_value
+        for r in simhash_blocks(df, 4, 64).collect()
+    }
+    assert len(blocks) == 8
+    assert sum(blocks["x", i] == blocks["y", i] for i in range(4)) >= 1
+
+
 def test_streaming_neardup_stateful(spark, tmp_path):
     """Cross-batch stateful near-dup (applyInPandasWithState): bounded file
     source, availableNow trigger. Run 1 elects representatives; run 2

@@ -146,35 +146,6 @@ def test_connected_components_basic(spark):
     }
 
 
-def test_oph_scheme_recall_vs_exact_jaccard_oracle(spark, corpus, tmp_path):
-    """The one-permutation signature fast path (minhash_scheme='oph') clears
-    the SAME binding ≥0.99 dup-pair recall gate as the default affine
-    family on the planted corpus — the acceptance bar for switching a
-    deployment to the O(n) kernel (functions/hashing.oph_minhash_batch)."""
-    cfg = PipelineConfig(shuffle_partitions=8, minhash_scheme="oph")
-    out = str(tmp_path / "oph")
-    pipe = NearDupPipeline(cfg)
-    pipe.run(spark, corpus.drop("cluster_id"), out)
-    ours = _pair_set(spark.read.parquet(f"{out}/all_pairs"))
-    sig = signatures.add_signatures(
-        corpus.drop("cluster_id"), cfg, include_shingles=True
-    )
-    oracle = _pair_set(brute_force_pairs(sig, cfg.jaccard_threshold))
-    assert oracle, "oracle found no pairs — corpus misconfigured"
-    recall = len(oracle & ours) / len(oracle)
-    assert recall >= 0.99, f"oph recall {recall:.4f} over {len(oracle)} pairs"
-
-
-def test_oph_scheme_unknown_raises(spark, corpus):
-    import pytest as _pytest
-
-    with _pytest.raises(KeyError):
-        signatures.add_signatures(
-            corpus.drop("cluster_id").limit(1),
-            PipelineConfig(minhash_scheme="nope"),
-        )
-
-
 def test_connected_components_stats(spark):
     """stats dict surfaces the round count and convergence flag; a 40-node
     chain needs more rounds than a 2-edge graph but stays O(log n)."""
@@ -701,6 +672,25 @@ def test_incremental_ingest_requires_hist_docs_for_old_candidates(
     with _pytest.raises(ValueError, match="hist_docs"):
         IncrementalIngest(CFG).run(
             spark, new_docs, store, str(tmp_path / "ingest3")
+        )
+
+
+def test_incremental_ingest_rejects_store_signed_with_other_config(
+    spark, tmp_path
+):
+    """A store signed under another seed shares no band bucket with the
+    batch: the ingest must refuse it, naming the field, instead of silently
+    finding no candidates."""
+    from iamsystem_python_spark.plans.ingest import IncrementalIngest
+
+    docs = generate_corpus_df(spark, 40, seed=7, partitions=2).drop("cluster_id")
+    store = str(tmp_path / "store")
+    NearDupPipeline(PipelineConfig(shuffle_partitions=2, seed=7)).run(
+        spark, docs, store
+    )
+    with pytest.raises(ValueError, match="seed: store 7, ingest 42"):
+        IncrementalIngest(PipelineConfig(shuffle_partitions=2, seed=42)).run(
+            spark, docs.limit(5), store, str(tmp_path / "ingest"), hist_docs=docs
         )
 
 
