@@ -153,9 +153,12 @@ def lsh_candidate_pairs(
     ``store`` signature table, the batch's pairs against the batch and the
     store (bucket_pairs). Buckets larger than cfg.band_bucket_cap are
     dropped (reported by lsh_bucket_stats, which NearDupPipeline runs only
-    with ``collect_bucket_stats=True``) — exact dups were already removed,
-    so an over-cap bucket is hash skew, not signal. At 1000-executor scale
-    this cap is what keeps the shuffle bounded.
+    with ``collect_bucket_stats=True``). Exact dups were already removed,
+    but an over-cap bucket can still be signal: a near-dup cluster larger
+    than the cap shares almost every band, so today the cap drops most of
+    its pairs (ROADMAP: "Hot near-dup clusters are lost at the bucket
+    cap"). At 1000-executor scale this cap is what keeps the shuffle
+    bounded.
     """
 
     def bands(sig: DataFrame) -> DataFrame:
@@ -351,32 +354,3 @@ def verify_pairs_recompute(
 
     return paired.mapInPandas(jaccard_kernel, schema=schema)
 
-
-def expand_pairs_through_exact_groups(
-    verified: DataFrame, sig_df: DataFrame
-) -> DataFrame:
-    """Near-dup pairs were computed between content representatives; expand
-    each endpoint back to every doc sharing that content. The rep→member map
-    is linear in corpus size (one row per doc), never quadratic."""
-    rep_map = sig_df.select(
-        F.col("doc_id").alias("member"),
-        F.min("doc_id").over(Window.partitionBy("sha256")).alias("rep"),
-    )
-    out = (
-        verified.join(
-            rep_map.withColumnRenamed("rep", "doc_a").withColumnRenamed("member", "m_a"),
-            "doc_a",
-        )
-        .join(
-            rep_map.withColumnRenamed("rep", "doc_b").withColumnRenamed("member", "m_b"),
-            "doc_b",
-        )
-        .where(F.col("m_a") != F.col("m_b"))
-        .select(
-            F.least("m_a", "m_b").alias("doc_a"),
-            F.greatest("m_a", "m_b").alias("doc_b"),
-            "jaccard",
-        )
-        .distinct()
-    )
-    return out

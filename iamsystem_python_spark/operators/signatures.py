@@ -56,10 +56,21 @@ SIGNATURE_SCHEMA_FULL = T.StructType(
 def with_doc_id(df: DataFrame) -> DataFrame:
     """Attach ``doc_id`` = sha2(repo||path||commit) — the one doc identity
     every stage and runner keys on. An existing ``doc_id`` column wins, so
-    a view that already carries one (signing_view's output) keeps it."""
+    a view that already carries one (signing_view's output) keeps it.
+
+    A null ``repo``, ``path`` or ``commit`` fails the job that first
+    evaluates the id: a null id could pair with nothing and would drop out
+    of ``clusters`` unseen. ``coalesce`` evaluates ``raise_error`` only for
+    such rows, so the check costs no extra Spark job."""
     if "doc_id" in df.columns:
         return df
-    return df.withColumn("doc_id", F.sha2(F.concat("repo", "path", "commit"), 256))
+    return df.withColumn(
+        "doc_id",
+        F.coalesce(
+            F.sha2(F.concat("repo", "path", "commit"), 256),
+            F.raise_error(F.lit("doc_id: null repo, path or commit")),
+        ),
+    )
 
 
 def signing_view(df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -12,7 +12,9 @@ Stage graph (north_rule):
     → candidates     (LSH band self-join on distinct-content
                       representatives only)
     → verified_pairs (exact Jaccard ≥ threshold)
-    → all_pairs      (expand through exact groups + exact edges)
+    → all_pairs      (verified pairs ∪ exact edges: each exact copy links
+                      to its representative by one edge, never expanded
+                      to member × member pairs)
     → clusters       (connected components, checkpointed)
     → metrics        (per-stage row counts, bucket histograms)
 
@@ -104,16 +106,15 @@ class NearDupPipeline:
             ),
         )
 
-        # all pairs: expand through exact groups + exact edges
-        def all_pairs() -> DataFrame:
-            near = dedup.expand_pairs_through_exact_groups(verified, sig)
-            return (
-                near.select("doc_a", "doc_b", "jaccard")
-                .union(dedup.exact_edges(sig))
-                .distinct()
-            )
-
-        pairs = stages.run("all_pairs", all_pairs)
+        # all pairs: representative-level verified pairs plus one exact
+        # edge per copy — the CC needs nothing more, and the edge set stays
+        # linear in the corpus however large an exact group grows
+        pairs = stages.run(
+            "all_pairs",
+            lambda: verified.select("doc_a", "doc_b", "jaccard")
+            .union(dedup.exact_edges(sig))
+            .distinct(),
+        )
 
         cc_stats: Dict[str, object] = {}
         clusters = stages.run(
@@ -137,9 +138,11 @@ class NearDupPipeline:
 def brute_force_pairs(sig_df: DataFrame, threshold: float) -> DataFrame:
     """Oracle: ALL pairs with exact shingle-Jaccard ≥ threshold (O(n²) —
     small-scale only). This is the 'reference cluster assignment' oracle the
-    recall≥0.99 metric compares against (BASELINE.md): near-dup pairs between
-    content representatives, expanded through exact groups, plus the exact
-    intra-group edges themselves (identical content ⇒ jaccard 1.0).
+    recall≥0.99 metric compares against (BASELINE.md), in the shape of the
+    pipeline's ``all_pairs``: near-dup pairs between content representatives
+    plus one exact edge from each copy to its representative (identical
+    content ⇒ jaccard 1.0). The exact edges are derived here, independent of
+    ``dedup.exact_edges``.
     sig_df must carry shingles (add_signatures(..., include_shingles=True))."""
     reps = dedup.distinct_content_representatives(sig_df)
     a = reps.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
@@ -158,7 +161,6 @@ def brute_force_pairs(sig_df: DataFrame, threshold: float) -> DataFrame:
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    near = dedup.expand_pairs_through_exact_groups(pairs, sig_df)
     exact_edges = (
         sig_df.select(
             F.col("doc_id").alias("doc_a"),
@@ -171,4 +173,4 @@ def brute_force_pairs(sig_df: DataFrame, threshold: float) -> DataFrame:
             F.lit(1.0).alias("jaccard"),
         )
     )
-    return near.union(exact_edges).distinct()
+    return pairs.union(exact_edges).distinct()
