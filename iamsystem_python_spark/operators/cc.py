@@ -8,20 +8,23 @@ in MapReduce and Beyond", SoCC'14) expressed as DataFrame self-joins:
   small-star: connect every ≤ neighbor to the minimum
               — converges to a star per component
 
-Each round is two groupBy/min + join stages; ``localCheckpoint(eager=True)``
-per round truncates lineage (SURVEY.md §4: required — iterative self-joins
-otherwise stack exponentially deep plans). Convergence = edge set stable
-(count of changed edges == 0). Deterministic: min-label tie-breaking.
-
-Labels are int64 (doc ids are hashed to int64 first — string comparisons in
-a multi-round shuffle would be needlessly wide at 10^12 scale; the
-id→label map is re-attached at the end).
+Node labels are the ``doc_id`` values themselves, so each component's
+min-label root IS its ``cluster_id`` (min doc_id), and no hashed label can
+merge two components. Each round is two groupBy/min + join stages ending in
+one checkpoint (``localCheckpoint(eager=True)`` by default) that truncates
+lineage (SURVEY.md §4: required — iterative self-joins otherwise stack
+exponentially deep plans). Convergence = no new edge: the round's edges
+are left-joined to the previous round's, and an ``Observation`` on that
+same checkpoint counts the unmatched rows. Deterministic: min-label
+tie-breaking.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from iamsystem_python_spark.functions.scoped_cache import tie_cache
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -30,7 +33,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
     sym = edges.select("u", "v").union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("mn"))
+    mins = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("mn"))
     out = (
         sym.join(mins, "u")
         .where(F.col("v") > F.col("u"))
@@ -67,6 +70,9 @@ def connected_components(
     cluster_id = min doc_id of the component (deterministic, reproducible —
     the recall metric compares pair sets derived from these assignments).
 
+    The loop stops at the first round that adds no edge; ``RuntimeError``
+    when ``max_iterations`` rounds pass without that.
+
     Per-round lineage truncation: ``localCheckpoint(eager=True)`` by default
     (lineage-free but executor-memory-resident — an executor loss loses the
     blocks and fails the job). Pass ``checkpoint_dir`` to use reliable
@@ -88,54 +94,46 @@ def connected_components(
         def _chk(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=True)
 
-    ids = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # compact int64 node ids: xxhash64 of doc_id (collision odds at even
-    # 10^10 nodes ≈ 10^-9 per pair; acceptable for clustering labels)
-    id_map = ids.select("doc_id", F.xxhash64("doc_id").alias("node"))
-    id_map = _chk(id_map)
+    # the labels are the doc ids: a pair (doc_a, doc_b) is an edge (u, v).
+    # Not deduplicated here: round 1 reads this set three times under
+    # different pushed-down filters, so a distinct here would plan three
+    # shuffles; each round's distinct below reuses the join's partitioning.
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
 
-    edges = _chk(
-        pairs.join(id_map.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("node", "u"), "doc_a")
-        .join(id_map.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("node", "v"), "doc_b")
-        .select("u", "v")
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-    rounds, converged = 0, False
-    for _ in range(max_iterations):
-        rounds += 1
-        after_large = _large_star(edges)
-        after_small = _chk(_small_star(after_large))
-        # converged when the edge set is a stable star forest
-        changed = after_small.exceptAll(edges).limit(1).count()
-        edges = after_small
-        if changed == 0:
-            converged = True
+    for rounds in range(1, max_iterations + 1):
+        # an edge with no match in the previous round's set is new; the
+        # count rides on the round's own checkpoint action
+        new_edges = Observation()
+        edges = _chk(
+            _small_star(_large_star(edges))
+            .join(edges.withColumn("seen", F.lit(True)), ["u", "v"], "left")
+            .observe(new_edges, F.count_if(F.col("seen").isNull()).alias("n"))
+            .select("u", "v")
+            .distinct()
+        )
+        # no new edge: the edge set is a stable star forest
+        if new_edges.get["n"] == 0:
             break
-    # star contraction is eager (per-round checkpoint + convergence count),
-    # so by return time the round count is final — callers pass a dict to
-    # surface it in run metrics ("CC rounds stay bounded" is a scale
-    # invariant worth recording, not inferring from stage wall-clock)
+    else:
+        # not a star forest yet: reading roots off it would split
+        # components, so fail instead of returning a wrong assignment
+        raise RuntimeError(
+            f"connected_components: not converged within "
+            f"max_iterations={max_iterations} rounds"
+        )
+    # the rounds ran eagerly, so the count is final; callers pass a dict to
+    # record it in run metrics ("CC rounds stay bounded" is a scale invariant)
     if stats is not None:
         stats["cc_rounds"] = rounds
-        stats["cc_converged"] = converged
+        stats["cc_converged"] = True
 
-    # star forest: every u points at its root v (= component min)
-    roots = edges.groupBy("u").agg(F.min("v").alias("root"))
-    membership = roots.select("u", "root").union(
-        roots.select(F.col("root").alias("u"), F.col("root"))
-    ).distinct()
-    # back to doc ids; cluster_id = min doc_id in component
-    labeled = membership.join(
-        id_map.withColumnRenamed("node", "u"), "u"
-    ).select("doc_id", F.col("root"))
-    cluster_min = labeled.groupBy("root").agg(F.min("doc_id").alias("cluster_id"))
-    return labeled.join(cluster_min, "root").select("doc_id", "cluster_id")
+    # star forest: every u points at its root (= component min doc_id)
+    roots = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
+    return (
+        roots.select(F.col("u").alias("doc_id"), "cluster_id")
+        .union(roots.select(F.col("cluster_id").alias("doc_id"), "cluster_id"))
+        .distinct()
+    )
 
 
 def incremental_connected_components(
@@ -219,6 +217,4 @@ def incremental_connected_components(
         "doc_id", F.coalesce("cluster_id", F.col("doc_id")).alias("cluster_id")
     )
     out = updated_old.unionByName(new_assign)
-    from iamsystem_python_spark.functions.scoped_cache import tie_cache
-
     return tie_cache(out, known)

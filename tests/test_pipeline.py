@@ -164,6 +164,17 @@ def test_connected_components_stats(spark):
     assert s2["cc_rounds"] <= 8
 
 
+def test_connected_components_round_cap_is_an_error(spark):
+    """A 40-node chain needs more than 2 rounds: hitting max_iterations
+    raises instead of reading roots off an edge set that is not yet a star
+    forest (which would split the component)."""
+    chain = spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(40)], ["doc_a", "doc_b"]
+    )
+    with pytest.raises(RuntimeError, match="max_iterations=2"):
+        connected_components(chain, max_iterations=2)
+
+
 def test_connected_components_chain(spark):
     """Long chain converges (log-round large/small star)."""
     n = 40
@@ -747,7 +758,9 @@ def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges):
     ]
     edges += [(a, b) for (a, b) in edges[:5]]  # duplicates
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
-    got = {(r.doc_id, r.cluster_id) for r in connected_components(df).collect()}
+    rows = connected_components(df).collect()
+    assert len(rows) == len({r.doc_id for r in rows})  # one row per doc_id
+    got = {(r.doc_id, r.cluster_id) for r in rows}
     assert got == set(_uf_components(edges).items())
 
 
