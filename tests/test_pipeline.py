@@ -764,6 +764,16 @@ def test_connected_components_matches_union_find(spark, seed, n_nodes, n_edges):
     assert got == set(_uf_components(edges).items())
 
 
+def test_connected_components_keeps_self_loop_node(spark):
+    """A node whose only edge is a self-loop is its own component; a
+    self-loop on a node with other edges does not change its root."""
+    edges = [("a", "a"), ("b", "c"), ("c", "c")]
+    df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
+    got = sorted(tuple(r) for r in connected_components(df).collect())
+    assert got == [("a", "a"), ("b", "b"), ("c", "b")]
+    assert set(got) == set(_uf_components(edges).items())
+
+
 @pytest.mark.parametrize("seed", [11, 12])
 def test_incremental_cc_matches_full_on_random_split(spark, seed):
     """Randomized differential for the cluster-store maintenance path:
